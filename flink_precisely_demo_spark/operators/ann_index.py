@@ -18,21 +18,13 @@ for a served system. This module materializes the assignment:
   cluster reads ~nprobe/k_cells of the corpus bytes. Candidate
   scoring reuses the local-top-k kernel shape from similarity.py:
   per-partition batch matmul + local top-k, one tiny global window.
-- ``upsert_ann_index`` / ``compact_ann_index``: LSM-style
-  maintenance. A served corpus mutates (new docs, re-embeddings,
-  takedowns) and a 100 TB index cannot be rebuilt per change, so
-  each upsert appends a small **delta generation** — the new vectors
+- ``upsert_ann_index`` / ``compact_ann_index``: the index is an LSM
+  generation store (operators/lsm.py). A delta holds the new vectors
   assigned to cells under the EXISTING centroids (no retrain; the
-  cell geometry is the serving contract) plus a tombstone set that
-  shadows every older version of the touched ids wherever they live
-  (an id's replacement vector may land in a DIFFERENT cell, so
-  shadowing must be by id+generation, not by cell). Readers
-  reconcile with one rule: a row from generation ``g`` is live iff
-  no tombstone with generation ``> g`` names its id. Reconciliation
-  cost at query time is the probed delta bytes plus one
-  broadcast-sized anti-join against the tombstone set; compaction
-  folds all generations back into a fresh base (same atomic
-  double-rename publish as the build) and resets that cost to zero.
+  cell geometry is the serving contract) plus tombstones for every
+  touched id — by id, not by cell, because a replacement vector may
+  land in a different cell. Compaction folds the deltas back into a
+  fresh base.
 
 Recall/cost knob: nprobe=1 is fastest; nprobe=k_cells degenerates to
 exact brute force over a partitioned scan (tested equivalence).
@@ -47,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import lsm
 from .kmeans import _centroid_arrays, kmeans_fit
 from .similarity import (
     _cosine_matrix,
@@ -85,192 +78,25 @@ def build_ann_index(corpus: DataFrame, index_path: str, k_cells: int = 8,
                     vec_col: str = "embedding",
                     train_df: DataFrame | None = None) -> None:
     """Train centroids and materialize the cell-partitioned corpus at
-    ``index_path`` (subdirs ``vectors/cell_id=N/`` and ``centroids``).
-
-    The build is ATOMIC at the index level: everything writes to a
-    UNIQUE ``<index_path>.build-<pid>-<nonce>`` dir (so concurrent
-    builders never clobber each other mid-write) and publishes only
-    after the ``_INDEX_OK`` marker is written, by renaming any old
-    index aside first and the new dir into place — two renames, so a
-    reader's window of "no index present" is the instant between
-    them, not the length of an rmtree. A crashed build leaves a stale
-    ``.build-*`` dir (reaped on the next attempt once its pid is
-    dead), never a half-written index a reader could mistake for a
-    real one — the serve path (:func:`index_ok`) accepts only
-    marker-bearing dirs. On an object store the production analogue
-    is a versioned prefix plus a pointer flip; same invariant,
-    different rename."""
-    import os
-
+    ``index_path`` (subdirs ``vectors/cell_id=N/`` and ``centroids``),
+    published atomically as an LSM base (operators/lsm.py)."""
     spark = corpus.sparkSession
-    _reap_stale_dirs(index_path)
-    nonce = _nonce()
-    build_path = f"{index_path}.build-{nonce}"
-    centroids = kmeans_fit(train_df if train_df is not None else corpus,
-                           k_cells, max_iter, id_col, vec_col)
-    cell_ids, cent_mat = _centroid_arrays(centroids)
-    assigned = _assign_to_cells(corpus, cent_mat, cell_ids,
-                                id_col, vec_col)
-    assigned.write.mode("overwrite").partitionBy("cell_id") \
-        .parquet(f"{build_path}/vectors")
-    spark.createDataFrame(
-        [(int(c), [float(x) for x in v]) for c, v in centroids],
-        "cell_id long, c array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{build_path}/centroids")
-    with open(os.path.join(build_path, "_INDEX_OK"), "w") as f:
-        f.write("ok\n")
-    _publish_index(build_path, index_path, nonce)
 
+    def write(stage: str) -> None:
+        centroids = kmeans_fit(train_df if train_df is not None
+                               else corpus, k_cells, max_iter,
+                               id_col, vec_col)
+        cell_ids, cent_mat = _centroid_arrays(centroids)
+        assigned = _assign_to_cells(corpus, cent_mat, cell_ids,
+                                    id_col, vec_col)
+        assigned.write.mode("overwrite").partitionBy("cell_id") \
+            .parquet(f"{stage}/vectors")
+        spark.createDataFrame(
+            [(int(c), [float(x) for x in v]) for c, v in centroids],
+            "cell_id long, c array<double>"
+        ).coalesce(1).write.mode("overwrite").parquet(f"{stage}/centroids")
 
-def _nonce() -> str:
-    import os
-    import uuid
-
-    return f"{os.getpid()}-{uuid.uuid4().hex[:8]}"
-
-
-def _reap_stale_dirs(index_path: str) -> None:
-    """Remove build/old staging dirs whose owning process is gone;
-    live pids are left alone so concurrent builds can't destroy each
-    other."""
-    import os
-    import shutil
-
-    parent, base = os.path.split(os.path.abspath(index_path))
-    for name in os.listdir(parent) if os.path.isdir(parent) else []:
-        for tag in (".build-", ".old-"):
-            if name.startswith(base + tag):
-                try:
-                    pid = int(name[len(base + tag):].split("-")[0])
-                    os.kill(pid, 0)
-                except (ValueError, ProcessLookupError):
-                    # stale remains may be a DIR (the staged index) or
-                    # a FILE (the stage's sibling .applied.json
-                    # manifest a crashed sink left) — rmtree silently
-                    # refuses files, so remove those explicitly
-                    dead = os.path.join(parent, name)
-                    if os.path.isdir(dead):
-                        shutil.rmtree(dead, ignore_errors=True)
-                    else:
-                        try:
-                            os.remove(dead)
-                        except OSError:
-                            pass
-                except PermissionError:
-                    pass                    # pid alive, not ours
-
-
-def _reap_stale_delta_stages(index_path: str) -> None:
-    """Remove ``deltas/.stage-<pid>-*`` staging dirs whose owning
-    process is gone — a writer that crashed between the staged write
-    and the publishing rename leaves litter `_reap_stale_dirs` never
-    sees (it only scans .build-/.old- SIBLINGS of the index root),
-    so it would accumulate until a base republish happened to remove
-    the whole deltas tree (r13 advice). Published ``delta-*`` dirs
-    and live pids are untouched."""
-    import os
-    import shutil
-
-    root = os.path.join(index_path, "deltas")
-    for name in os.listdir(root) if os.path.isdir(root) else []:
-        if name.startswith(".stage-"):
-            try:
-                pid = int(name[len(".stage-"):].split("-")[0])
-                os.kill(pid, 0)
-            except (ValueError, ProcessLookupError):
-                shutil.rmtree(os.path.join(root, name),
-                              ignore_errors=True)
-            except PermissionError:
-                pass                    # pid alive, not ours
-
-
-def _publish_index(build_path: str, final_path: str, nonce: str) -> None:
-    """Atomic publish: swing the old index aside (rename, not rmtree
-    — the no-index window is one rename pair, not a recursive
-    delete), then the new one into place; reclaim the old dir
-    afterwards."""
-    import os
-    import shutil
-
-    old_path = f"{final_path}.old-{nonce}"
-    try:
-        os.rename(final_path, old_path)
-    except FileNotFoundError:
-        old_path = None                     # first build: nothing to swap
-    os.rename(build_path, final_path)
-    if old_path is not None:
-        shutil.rmtree(old_path, ignore_errors=True)
-
-
-_DELTA_RE = r"delta-(\d{6})-"
-
-
-def _delta_dirs(index_path: str) -> list[tuple[int, str]]:
-    """Published delta generations, ascending by sequence number.
-    Only marker-bearing dirs count — a crashed upsert leaves an
-    unmarked staging dir that readers never see."""
-    import os
-    import re
-
-    root = os.path.join(index_path, "deltas")
-    out = []
-    for name in sorted(os.listdir(root)) if os.path.isdir(root) else []:
-        m = re.match(_DELTA_RE, name)
-        d = os.path.join(root, name)
-        if m and os.path.isfile(os.path.join(d, "_DELTA_OK")):
-            out.append((int(m.group(1)), d))
-    out.sort()
-    return out
-
-
-def delta_tags(index_path: str) -> set[str]:
-    """Writer tags of the published delta generations (see the
-    ``tag`` param of :func:`upsert_ann_index`). A tag is atomic with
-    its delta — published together by the same rename — which is
-    what lets a micro-batch sink make delta appends idempotent
-    (streaming/ann_upsert.py): appends, unlike versioned rewrites,
-    are not naturally retry-safe."""
-    import os
-
-    out = set()
-    for _, d in _delta_dirs(index_path):
-        tag_file = os.path.join(d, "_TAG")
-        if os.path.isfile(tag_file):
-            with open(tag_file) as f:
-                out.add(f.read().strip())
-    return out
-
-
-def _manifest_path(index_path: str) -> str:
-    return index_path.rstrip("/") + ".applied.json"
-
-
-def applied_tags(index_path: str) -> set[str]:
-    """Every writer tag the index has ever absorbed: the persisted
-    sibling manifest (``<index_path>.applied.json`` — outside the
-    index dir so the compactor's double-rename publish never touches
-    it) unioned with the tags still riding live delta dirs. Tags fold
-    away with their deltas at compaction, so the manifest is the
-    durable half of the idempotence record."""
-    import json
-
-    try:
-        with open(_manifest_path(index_path)) as f:
-            persisted = set(json.load(f))
-    except (FileNotFoundError, json.JSONDecodeError):
-        persisted = set()
-    return persisted | delta_tags(index_path)
-
-
-def _persist_tags(index_path: str, tags: set[str]) -> None:
-    import json
-    import os
-
-    path = _manifest_path(index_path)
-    tmp = f"{path}.tmp-{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(sorted(tags), f)
-    os.rename(tmp, path)
+    lsm.publish_base(index_path, write)
 
 
 def upsert_ann_index(spark: SparkSession, index_path: str,
@@ -286,83 +112,25 @@ def upsert_ann_index(spark: SparkSession, index_path: str,
     EXISTING centroids (``_assign_to_cells`` — the same kernel the
     build used, so there is exactly one assignment rule) and written
     cell-partitioned, so probe-time pruning applies to deltas exactly
-    as to the base. Every touched id (updated or deleted) gets a
-    tombstone stamped with this generation; readers drop any
-    older-generation row the tombstone names. The delta stages under
-    an unmarked dir and publishes by rename after ``_DELTA_OK`` is
-    written — a crashed upsert is invisible, never half-read.
-
-    Scale: the work is proportional to the DELTA, not the index —
-    one assignment scan over ``updates`` and a partitioned write.
-    Tombstones accumulate until :func:`compact_ann_index`; they are
-    delta-metadata-sized (ids only), which is what keeps the read
-    path's anti-join broadcastable. Single-writer per index (like
-    the build); concurrent upserters need external coordination.
+    as to the base. Work is proportional to the DELTA, not the
+    index; tombstones are ids only, which keeps the read path's
+    anti-join broadcastable until :func:`compact_ann_index`.
 
     No reference counterpart (the reference has no vector serving at
     all); the delta/tombstone/compact shape is the standard LSM
     contract (e.g. Lucene segment deletes, Delta Lake deletion
     vectors) re-expressed over plain partitioned parquet."""
-    import os
 
-    if updates is None and delete_ids is None:
-        raise ValueError("upsert_ann_index: nothing to apply "
-                         "(updates and delete_ids both None)")
-    if not index_ok(index_path):
-        raise FileNotFoundError(f"no published index at {index_path}")
-    deltas = _delta_dirs(index_path)
-    seq = (deltas[-1][0] + 1) if deltas else 1
-    root = os.path.join(index_path, "deltas")
-    os.makedirs(root, exist_ok=True)
-    _reap_stale_delta_stages(index_path)
-    nonce = _nonce()
-    stage = os.path.join(root, f".stage-{nonce}")
-    final = os.path.join(root, f"delta-{seq:06d}-{nonce}")
-
-    tomb_frames = []
-    if updates is not None:
-        tomb_frames.append(updates.select(id_col).distinct())
-        # an EMPTY updates frame must not write vectors/: a
-        # partitioned write with zero rows leaves a file-less dir
-        # that spark.read.parquet cannot infer a schema from,
-        # poisoning every later read of the index
-        if updates.isEmpty():
-            updates = None
-    if updates is not None:
+    def write_rows(stage: str) -> None:
         cell_ids, cent_mat = load_centroids(spark, index_path)
         assigned = _assign_to_cells(updates, cent_mat, cell_ids,
                                     id_col, vec_col)
         assigned.write.mode("overwrite").partitionBy("cell_id") \
             .parquet(f"{stage}/vectors")
-    if delete_ids is not None:
-        if isinstance(delete_ids, DataFrame):
-            dels = delete_ids.toDF(id_col).distinct()
-        else:
-            # schema from the index's own id column, not a hardcoded
-            # long: a string- or int32-keyed index must get
-            # type-matched tombstones or the unionByName with
-            # update-id tombstones / the reader's anti-join breaks
-            # (r12 advisory)
-            from pyspark.sql import types as T
 
-            id_type = spark.read.parquet(f"{index_path}/vectors") \
-                .schema[id_col].dataType
-            dels = spark.createDataFrame(
-                [(i,) for i in delete_ids],
-                T.StructType([T.StructField(id_col, id_type)]))
-        tomb_frames.append(dels)
-    tomb = tomb_frames[0]
-    for extra in tomb_frames[1:]:
-        tomb = tomb.unionByName(extra)
-    tomb.distinct().coalesce(1).write.mode("overwrite") \
-        .parquet(f"{stage}/tombstones")
-    if tag is not None:
-        with open(os.path.join(stage, "_TAG"), "w") as f:
-            f.write(tag + "\n")
-    with open(os.path.join(stage, "_DELTA_OK"), "w") as f:
-        f.write("ok\n")
-    os.rename(stage, final)
-    return seq
+    touched = None if updates is None else updates.select(id_col)
+    return lsm.upsert(spark, index_path, id_col, touched, delete_ids,
+                      write_rows, "vectors", tag)
 
 
 def _live_vectors(spark: SparkSession, index_path: str, id_col: str,
@@ -370,13 +138,7 @@ def _live_vectors(spark: SparkSession, index_path: str, id_col: str,
                   ) -> DataFrame:
     """The reconciled (id, vec, cell_id) view of base + deltas,
     optionally restricted to ``cells`` (partition-pruned on every
-    generation). With no deltas this is exactly the plain base scan
-    — zero reconciliation overhead on a freshly built or freshly
-    compacted index."""
-    import os
-    from functools import reduce
-
-    from .broadcast import hint_broadcast_if_small
+    generation)."""
 
     def scan(path: str) -> DataFrame:
         df = spark.read.parquet(path)
@@ -384,29 +146,7 @@ def _live_vectors(spark: SparkSession, index_path: str, id_col: str,
             df = df.filter(F.col("cell_id").isin(cells))
         return df.select(id_col, vec_col, F.col("cell_id").cast("long"))
 
-    base = scan(f"{index_path}/vectors")
-    deltas = _delta_dirs(index_path)
-    if not deltas:
-        return base
-    frames = [base.withColumn("_gen", F.lit(0))]
-    tombs = []
-    for seq, d in deltas:
-        vdir = os.path.join(d, "vectors")
-        if os.path.isdir(vdir):           # pure-delete deltas have none
-            frames.append(scan(vdir).withColumn("_gen", F.lit(seq)))
-        tombs.append(spark.read.parquet(os.path.join(d, "tombstones"))
-                     .select(F.col(id_col).alias("_t_id"),
-                             F.lit(seq).alias("_t_gen")))
-    allv = reduce(lambda a, b: a.unionByName(b), frames)
-    tomb = hint_broadcast_if_small(
-        reduce(lambda a, b: a.unionByName(b), tombs))
-    # live iff no LATER generation tombstoned this id: an equi-join
-    # on id plus the gen inequality => BroadcastHashJoin LeftAnti
-    # when the tombstone set is small (the common case), map-side
-    live = allv.join(
-        tomb, (allv[id_col] == tomb["_t_id"]) &
-              (tomb["_t_gen"] > allv["_gen"]), "left_anti")
-    return live.drop("_gen")
+    return lsm.live_rows(spark, index_path, "vectors", id_col, scan)
 
 
 def index_stats(spark: SparkSession, index_path: str,
@@ -436,7 +176,7 @@ def index_stats(spark: SparkSession, index_path: str,
 
     base = counted(spark.read.parquet(f"{index_path}/vectors"), "n_base")
     dframes = [spark.read.parquet(os.path.join(d, "vectors"))
-               for _, d in _delta_dirs(index_path)
+               for _, d in lsm.generations(index_path)
                if os.path.isdir(os.path.join(d, "vectors"))]
     live = counted(_live_vectors(spark, index_path, id_col, vec_col),
                    "n_live")
@@ -460,63 +200,30 @@ def index_stats(spark: SparkSession, index_path: str,
 def compact_ann_index(spark: SparkSession, index_path: str,
                       id_col: str = "vec_id",
                       vec_col: str = "embedding") -> int:
-    """Fold every delta generation into a fresh base and publish it
-    with the same atomic double-rename as the build (centroids are
+    """Fold every delta generation into a fresh base (centroids are
     carried over unchanged — compaction never moves a vector between
     cells). Returns the number of generations folded (0 = no-op).
+    Reads pay O(accumulated delta) until the next compaction resets
+    the read path to the plain scan — the operator a 100 TB index
+    runs on a schedule, sized so the tombstone set stays
+    broadcastable."""
 
-    After compaction the read path is back to the zero-overhead
-    plain scan, so the serving cost model is: reads pay
-    O(accumulated delta) until the next compaction resets it — the
-    operator a 100 TB index runs on a schedule, sized so the
-    tombstone set stays broadcastable. Single-compactor per index.
+    def write(stage: str) -> None:
+        live = _live_vectors(spark, index_path, id_col, vec_col)
+        if live.isEmpty():
+            # fully-deleted corpus: a partitioned write of zero rows
+            # leaves a file-less dir that later reads cannot infer a
+            # schema from; an unpartitioned empty write keeps one
+            # schema-bearing file (nothing to prune in an empty index)
+            live.coalesce(1).write.mode("overwrite") \
+                .parquet(f"{stage}/vectors")
+        else:
+            live.write.mode("overwrite").partitionBy("cell_id") \
+                .parquet(f"{stage}/vectors")
+        spark.read.parquet(f"{index_path}/centroids").coalesce(1) \
+            .write.mode("overwrite").parquet(f"{stage}/centroids")
 
-    Compaction folds delta dirs — and the writer tags riding them —
-    away, so any live tags are first merged into the sibling
-    ``.applied.json`` manifest (the durable idempotence record the
-    streaming sink's retry check reads). That makes OUT-OF-BAND
-    scheduled compaction safe against an index fed by
-    streaming/ann_upsert.ann_upsert_sink: a foreachBatch retry after
-    an external compact still sees its batch tag and no-ops, instead
-    of re-applying an already-absorbed batch (r12 advisory). A crash
-    between the manifest write and the fold only duplicates tags in
-    set-union, never loses one."""
-    import os
-
-    deltas = _delta_dirs(index_path)
-    if not deltas:
-        return 0
-    live_tags = delta_tags(index_path)
-    if live_tags:
-        _persist_tags(index_path, applied_tags(index_path))
-    _reap_stale_dirs(index_path)
-    _reap_stale_delta_stages(index_path)
-    nonce = _nonce()
-    build_path = f"{index_path}.build-{nonce}"
-    live = _live_vectors(spark, index_path, id_col, vec_col)
-    if live.isEmpty():
-        # fully-deleted corpus: a partitioned write of zero rows
-        # leaves a file-less dir that later reads cannot infer a
-        # schema from; an unpartitioned empty write keeps one
-        # schema-bearing file (nothing to prune in an empty index)
-        live.coalesce(1).write.mode("overwrite") \
-            .parquet(f"{build_path}/vectors")
-    else:
-        live.write.mode("overwrite").partitionBy("cell_id") \
-            .parquet(f"{build_path}/vectors")
-    spark.read.parquet(f"{index_path}/centroids").coalesce(1) \
-        .write.mode("overwrite").parquet(f"{build_path}/centroids")
-    with open(os.path.join(build_path, "_INDEX_OK"), "w") as f:
-        f.write("ok\n")
-    _publish_index(build_path, index_path, nonce)
-    return len(deltas)
-
-
-def index_ok(index_path: str) -> bool:
-    """True only for a completely-built index (marker present)."""
-    import os
-
-    return os.path.isfile(os.path.join(index_path, "_INDEX_OK"))
+    return lsm.compact(index_path, write)
 
 
 #: (index_path, centroid-file fingerprint) -> (cell_ids, cent_mat).

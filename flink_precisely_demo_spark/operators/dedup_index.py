@@ -13,10 +13,8 @@ index of per-document band digests, partitioned by ``band_id``:
 - ``build_band_index``: band the corpus (the exact
   ``_minhash_banded`` kernel the in-corpus pipeline uses — one
   banding rule, no drift) and write ``(doc_id, band_key)`` parquet
-  under ``bands/band_id=B/``, published with the same atomic
-  nonce-stage + double-rename protocol as the ANN index (the
-  staging/marker helpers are imported from operators/ann_index —
-  one publish protocol in the codebase, not two).
+  under ``bands/band_id=B/``, published as an LSM base
+  (operators/lsm.py).
 - ``ingest_batch``: band ONLY the incoming batch, union with the
   index's band rows, and label each new document novel-or-duplicate
   in one bucket-grouped aggregation — no pairwise explosion: per
@@ -30,10 +28,8 @@ index of per-document band digests, partitioned by ``band_id``:
   pipeline applies, measured over the COMBINED (index + batch)
   bucket population.
 - ``append_bands``: the accepted batch's band rows become a delta
-  generation (``deltas/delta-NNNNNN-*/``, atomic-marker publish —
-  the ANN index's LSM shape re-expressed for band digests), so
-  tomorrow's ingest sees today's documents without a rebuild;
-  ``compact_band_index`` folds deltas into a fresh base.
+  generation, so tomorrow's ingest sees today's documents without a
+  rebuild; ``compact_band_index`` folds deltas into a fresh base.
 - **maintained clusters** (r14): ``build_band_index(clusters=True)``
   seeds persistent cluster membership (``clusters/`` — the
   non-trivial min-id labels of the build corpus's capped-bucket
@@ -63,17 +59,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ann_index import (
-    _delta_dirs,
-    _nonce,
-    _persist_tags,
-    _publish_index,
-    _reap_stale_delta_stages,
-    _reap_stale_dirs,
-    applied_tags,
-    delta_tags,
-    index_ok,
-)
+from . import lsm
 from .dedup import _minhash_banded, connected_components
 
 _DEFAULTS = dict(num_hashes=16, bands=4, shingle_n=3)
@@ -126,14 +112,10 @@ def build_band_index(corpus: DataFrame, index_path: str,
     singletons are implicit), so later ingests can extend cluster
     membership without ever re-banding the corpus
     (:func:`ingest_cluster_edges` / :func:`cluster_labels`)."""
-    _reap_stale_dirs(index_path)
-    nonce = _nonce()
-    stage = f"{index_path}.build-{nonce}"
     banded = _minhash_banded(corpus, text_col, id_col,
                              num_hashes, bands, shingle_n)
-    if clusters:
-        banded = banded.persist()       # bands write + edge pass share it
-    try:
+
+    def write(stage: str) -> None:
         _write_bands(banded, f"{stage}/bands")
         if clusters:
             comp = connected_components(
@@ -142,12 +124,14 @@ def build_band_index(corpus: DataFrame, index_path: str,
              .select(F.col("node").alias(id_col),
                      F.col("label").alias("cluster_id"))
              .write.mode("overwrite").parquet(f"{stage}/clusters"))
+
+    if clusters:
+        banded = banded.persist()       # bands write + edge pass share it
+    try:
+        lsm.publish_base(index_path, write)
     finally:
         if clusters:
             banded.unpersist()
-    with open(os.path.join(stage, "_INDEX_OK"), "w") as f:
-        f.write("ok\n")
-    _publish_index(stage, index_path, nonce)
 
 
 def _index_bands(spark: SparkSession, index_path: str,
@@ -156,7 +140,7 @@ def _index_bands(spark: SparkSession, index_path: str,
     from functools import reduce
 
     frames = [spark.read.parquet(f"{index_path}/bands")]
-    for _, d in _delta_dirs(index_path):
+    for _, d in lsm.generations(index_path):
         frames.append(spark.read.parquet(os.path.join(d, "bands")))
     out = reduce(lambda a, b: a.unionByName(b), frames)
     return out.select(id_col, F.col("band_id").cast("long"), "band_key")
@@ -176,7 +160,7 @@ def _ingest_candidates(spark: SparkSession, index_path: str,
     historical and min batch member, so hot buckets never emit pairs;
     the cap mirrors the in-corpus pipeline's, measured over the
     union."""
-    if not index_ok(index_path):
+    if not lsm.index_ok(index_path):
         raise FileNotFoundError(f"no published index at {index_path}")
     if banded is None:
         banded = _minhash_banded(batch, text_col, id_col,
@@ -279,9 +263,8 @@ def append_bands(spark: SparkSession, index_path: str, batch: DataFrame,
                  banded: DataFrame | None = None,
                  cluster_edges: DataFrame | None = None) -> int:
     """Publish the batch's band rows as a delta generation so the
-    next ingest sees them; returns the generation number. ``tag``
-    rides the delta's atomic rename (the ANN index's writer-tag
-    contract) so a micro-batch sink can make appends idempotent;
+    next ingest sees them; returns the generation number. ``tag`` is
+    the generation's writer tag (operators/lsm.py);
     ``banded`` reuses a pre-computed banding (see ingest_batch);
     ``cluster_edges`` (from :func:`ingest_cluster_edges`) rides the
     SAME atomic rename so cluster maintenance can never observe a
@@ -296,8 +279,6 @@ def append_bands(spark: SparkSession, index_path: str, batch: DataFrame,
     re-reading historical text). Pass ``cluster_edges=`` (the
     streaming sink auto-detects and does this) or build the index
     with ``clusters=False``."""
-    if not index_ok(index_path):
-        raise FileNotFoundError(f"no published index at {index_path}")
     if cluster_edges is None and \
             os.path.isdir(os.path.join(index_path, "clusters")):
         raise ValueError(
@@ -306,28 +287,17 @@ def append_bands(spark: SparkSession, index_path: str, batch: DataFrame,
             "cluster_edges — the delta's links would be silently lost "
             "at the next compaction; pass "
             "cluster_edges=ingest_cluster_edges(...)")
-    deltas = _delta_dirs(index_path)
-    seq = (deltas[-1][0] + 1) if deltas else 1
-    root = os.path.join(index_path, "deltas")
-    os.makedirs(root, exist_ok=True)
-    _reap_stale_delta_stages(index_path)
-    nonce = _nonce()
-    stage = os.path.join(root, f".stage-{nonce}")
-    final = os.path.join(root, f"delta-{seq:06d}-{nonce}")
     if banded is None:
         banded = _minhash_banded(batch, text_col, id_col,
                                  num_hashes, bands, shingle_n)
-    _write_bands(banded, f"{stage}/bands")
-    if cluster_edges is not None:
-        cluster_edges.write.mode("overwrite") \
-            .parquet(f"{stage}/cluster_edges")
-    if tag is not None:
-        with open(os.path.join(stage, "_TAG"), "w") as f:
-            f.write(tag + "\n")
-    with open(os.path.join(stage, "_DELTA_OK"), "w") as f:
-        f.write("ok\n")
-    os.rename(stage, final)
-    return seq
+
+    def write(stage: str) -> None:
+        _write_bands(banded, f"{stage}/bands")
+        if cluster_edges is not None:
+            cluster_edges.write.mode("overwrite") \
+                .parquet(f"{stage}/cluster_edges")
+
+    return lsm.append_generation(index_path, write, tag)
 
 
 def cluster_labels(spark: SparkSession, index_path: str,
@@ -355,7 +325,7 @@ def cluster_labels(spark: SparkSession, index_path: str,
             "build_band_index(..., clusters=True)")
     base = spark.read.parquet(cl)
     edge_dirs = [os.path.join(d, "cluster_edges")
-                 for _, d in _delta_dirs(index_path)]
+                 for _, d in lsm.generations(index_path)]
     edge_dirs = [d for d in edge_dirs if os.path.isdir(d)]
     if not edge_dirs:
         return base.select(id_col, "cluster_id")
@@ -402,32 +372,19 @@ def band_index_stats(spark: SparkSession, index_path: str,
 
 def compact_band_index(spark: SparkSession, index_path: str,
                        id_col: str = "doc_id") -> int:
-    """Fold deltas into a fresh base (atomic double-rename publish);
-    returns the number of generations folded. Live writer tags are
-    persisted to the sibling ``.applied.json`` manifest first, so an
-    out-of-band compact never erases a streaming sink's idempotence
-    record (the same contract as compact_ann_index). On a clustered
-    index the maintained labels fold too: the union-find forest
-    (base star edges + delta cluster edges) collapses into a fresh
-    non-trivial label table, so post-compaction cluster reads are a
-    plain scan again."""
-    deltas = _delta_dirs(index_path)
-    if not deltas:
-        return 0
-    if delta_tags(index_path):
-        _persist_tags(index_path, applied_tags(index_path))
-    _reap_stale_dirs(index_path)
-    _reap_stale_delta_stages(index_path)
-    nonce = _nonce()
-    stage = f"{index_path}.build-{nonce}"
-    allb = _index_bands(spark, index_path, id_col)
-    _write_bands(allb, f"{stage}/bands")
-    if os.path.isdir(os.path.join(index_path, "clusters")):
-        # fold BEFORE the publish swaps the old base out: the write
-        # materializes the propagation while base+deltas still exist
-        cluster_labels(spark, index_path, id_col) \
-            .write.mode("overwrite").parquet(f"{stage}/clusters")
-    with open(os.path.join(stage, "_INDEX_OK"), "w") as f:
-        f.write("ok\n")
-    _publish_index(stage, index_path, nonce)
-    return len(deltas)
+    """Fold deltas into a fresh base; returns the number of
+    generations folded. On a clustered index the maintained labels
+    fold too: the union-find forest (base star edges + delta cluster
+    edges) collapses into a fresh non-trivial label table, so
+    post-compaction cluster reads are a plain scan again."""
+
+    def write(stage: str) -> None:
+        _write_bands(_index_bands(spark, index_path, id_col),
+                     f"{stage}/bands")
+        if os.path.isdir(os.path.join(index_path, "clusters")):
+            # fold BEFORE the publish swaps the old base out: the write
+            # materializes the propagation while base+deltas still exist
+            cluster_labels(spark, index_path, id_col) \
+                .write.mode("overwrite").parquet(f"{stage}/clusters")
+
+    return lsm.compact(index_path, write)

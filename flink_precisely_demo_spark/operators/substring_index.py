@@ -9,15 +9,12 @@ stride-1 k-token window hashing) over the WHOLE corpus on every run.
 A production pipeline asks the ingest-shaped question instead: "which
 verbatim spans does today's batch share with the 100 TB we already
 keep?" This module materializes the window-hash table once as an LSM
-index (the same delta/compact/writer-tag protocol as the band and ANN
-indexes — operators/{dedup_index,ann_index}.py; one publish protocol
-in the codebase, not three):
+generation store (operators/lsm.py):
 
 - ``build_substring_index``: fold the corpus text once and persist
   ``windows/`` (win_hash, id, pos — 16-hex + two longs, linear in
   corpus tokens) plus ``stats/`` (per-hash document frequency and
-  total occurrences), atomically published with the manifest pinning
-  (k, max_df, max_occ).
+  total occurrences), with the manifest pinning (k, max_df, max_occ).
 - ``ingest_substring_spans``: hash ONLY the batch, look up matching
   absorbed anchors, and extend aligned anchor chains into maximal
   runs — (batch doc, absorbed doc, both offsets, exact run length).
@@ -57,29 +54,17 @@ No reference counterpart (extension scope, SURVEY.md §2.3).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ann_index import (
-    _delta_dirs,
-    _nonce,
-    _persist_tags,
-    _publish_index,
-    _reap_stale_delta_stages,
-    _reap_stale_dirs,
-    applied_tags,
-    delta_tags,
-    index_ok,
-)
+from . import lsm
 from .dedup import sliding_window_hashes, spans_from_windows
 
 
-def _manifest(index_path: str) -> dict:
-    with open(os.path.join(index_path, "substring_manifest.json")) as f:
-        return json.load(f)
+def manifest(index_path: str) -> dict:
+    return lsm.read_json(index_path, "substring_manifest.json")
 
 
 def _hash_stats(w: DataFrame, id_col: str) -> DataFrame:
@@ -117,17 +102,15 @@ def build_substring_index(corpus: DataFrame, index_path: str,
     makes the prune lossless."""
     if max_occ is None:
         max_occ = 4 * max_df
-    _reap_stale_dirs(index_path)
-    nonce = _nonce()
-    stage = f"{index_path}.build-{nonce}"
-    w = sliding_window_hashes(corpus, text_col, id_col, k)
-    _write_gen(w, id_col, stage)
-    with open(os.path.join(stage, "substring_manifest.json"), "w") as f:
-        json.dump({"k": k, "id_col": id_col, "max_df": max_df,
-                   "max_occ": max_occ}, f)
-    with open(os.path.join(stage, "_INDEX_OK"), "w") as f:
-        f.write("ok\n")
-    _publish_index(stage, index_path, nonce)
+    man = {"k": k, "id_col": id_col, "max_df": max_df,
+           "max_occ": max_occ}
+
+    def write(stage: str) -> None:
+        _write_gen(sliding_window_hashes(corpus, text_col, id_col, k),
+                   id_col, stage)
+        lsm.write_json(stage, "substring_manifest.json", man)
+
+    lsm.publish_base(index_path, write)
 
 
 def _index_windows(spark: SparkSession, index_path: str) -> DataFrame:
@@ -135,7 +118,7 @@ def _index_windows(spark: SparkSession, index_path: str) -> DataFrame:
     from functools import reduce
 
     frames = [spark.read.parquet(f"{index_path}/windows")]
-    for _, d in _delta_dirs(index_path):
+    for _, d in lsm.generations(index_path):
         frames.append(spark.read.parquet(os.path.join(d, "windows")))
     return reduce(lambda a, b: a.unionByName(b), frames)
 
@@ -146,7 +129,7 @@ def _index_stats(spark: SparkSession, index_path: str) -> DataFrame:
     from functools import reduce
 
     frames = [spark.read.parquet(f"{index_path}/stats")]
-    for _, d in _delta_dirs(index_path):
+    for _, d in lsm.generations(index_path):
         frames.append(spark.read.parquet(os.path.join(d, "stats")))
     allp = reduce(lambda a, b: a.unionByName(b), frames)
     return allp.groupBy("win_hash").agg(
@@ -159,32 +142,14 @@ def append_windows(spark: SparkSession, index_path: str,
                    id_col: str = "doc_id", tag: str | None = None,
                    windows: DataFrame | None = None) -> int:
     """Publish the batch's window rows + stat partials as a delta
-    generation (atomic nonce-stage rename; ``tag`` rides it for the
-    writer-idempotence contract). ``windows`` reuses a pre-computed
+    generation carrying writer ``tag``. ``windows`` reuses a pre-computed
     hash table so an ingest-then-append caller folds the batch text
     once. Returns the generation number."""
-    if not index_ok(index_path):
-        raise FileNotFoundError(f"no published index at {index_path}")
-    man = _manifest(index_path)
-    deltas = _delta_dirs(index_path)
-    seq = (deltas[-1][0] + 1) if deltas else 1
-    root = os.path.join(index_path, "deltas")
-    os.makedirs(root, exist_ok=True)
-    _reap_stale_delta_stages(index_path)
-    nonce = _nonce()
-    stage = os.path.join(root, f".stage-{nonce}")
-    final = os.path.join(root, f"delta-{seq:06d}-{nonce}")
     if windows is None:
         windows = sliding_window_hashes(batch, text_col, id_col,
-                                        man["k"])
-    _write_gen(windows, id_col, stage)
-    if tag is not None:
-        with open(os.path.join(stage, "_TAG"), "w") as f:
-            f.write(tag + "\n")
-    with open(os.path.join(stage, "_DELTA_OK"), "w") as f:
-        f.write("ok\n")
-    os.rename(stage, final)
-    return seq
+                                        manifest(index_path)["k"])
+    return lsm.append_generation(
+        index_path, lambda stage: _write_gen(windows, id_col, stage), tag)
 
 
 def ingest_substring_spans(spark: SparkSession, index_path: str,
@@ -207,9 +172,9 @@ def ingest_substring_spans(spark: SparkSession, index_path: str,
     touched."""
     from pyspark.sql import Window
 
-    if not index_ok(index_path):
+    if not lsm.index_ok(index_path):
         raise FileNotFoundError(f"no published index at {index_path}")
-    man = _manifest(index_path)
+    man = manifest(index_path)
     k, max_df, max_occ = man["k"], man["max_df"], man["max_occ"]
     if windows is None:
         windows = sliding_window_hashes(batch, text_col, id_col, k)
@@ -254,9 +219,9 @@ def substring_spans_from_index(spark: SparkSession, index_path: str,
     otherwise resurrect such a hash with undercounted partials —
     stats-based caps keep it excluded forever, exactly as the
     monotonicity argument requires."""
-    if not index_ok(index_path):
+    if not lsm.index_ok(index_path):
         raise FileNotFoundError(f"no published index at {index_path}")
-    man = _manifest(index_path)
+    man = manifest(index_path)
     return spans_from_windows(
         _index_windows(spark, index_path), man["id_col"], man["k"],
         min_len, man["max_df"], man["max_occ"],
@@ -269,9 +234,9 @@ def substring_index_stats(spark: SparkSession,
     n_over_occ, n_deltas) — the numbers a serving deployment alerts
     on (over-cap growth says the corpus needs a longer k or an
     exact-dedup pre-pass on the hot cohorts)."""
-    man = _manifest(index_path)
+    man = manifest(index_path)
     st = _index_stats(spark, index_path)
-    n_deltas = len(_delta_dirs(index_path))
+    n_deltas = len(lsm.generations(index_path))
     return st.agg(
         F.coalesce(F.sum("tot"), F.lit(0)).cast("long")
         .alias("n_anchors"),
@@ -285,39 +250,26 @@ def substring_index_stats(spark: SparkSession,
 
 def compact_substring_index(spark: SparkSession,
                             index_path: str) -> int:
-    """Fold deltas into a fresh base (atomic double-rename publish)
-    and PRUNE window rows of over-cap hashes (folded df > max_df or
-    tot > max_occ — lossless for every query this index can serve,
-    per the append-only monotonicity argument). Stats rows are kept
-    in full, so later ingests still see pruned hashes as over-cap
-    instead of rediscovering them. Live writer tags persist to the
-    sibling manifest first (the shared idempotence contract).
-    Returns the number of generations folded."""
-    deltas = _delta_dirs(index_path)
-    if not deltas:
-        return 0
-    man = _manifest(index_path)
-    id_col = man["id_col"]
-    if delta_tags(index_path):
-        _persist_tags(index_path, applied_tags(index_path))
-    _reap_stale_dirs(index_path)
-    _reap_stale_delta_stages(index_path)
-    nonce = _nonce()
-    stage = f"{index_path}.build-{nonce}"
-    stats = _index_stats(spark, index_path).persist()
-    try:
-        keep = (stats.filter((F.col("df") <= man["max_df"])
-                             & (F.col("tot") <= man["max_occ"]))
-                .select("win_hash"))
-        w = _index_windows(spark, index_path).join(keep, "win_hash")
-        (w.repartition("win_hash")
-         .write.mode("overwrite").parquet(f"{stage}/windows"))
-        stats.write.mode("overwrite").parquet(f"{stage}/stats")
-    finally:
-        stats.unpersist()
-    with open(os.path.join(stage, "substring_manifest.json"), "w") as f:
-        json.dump(man, f)
-    with open(os.path.join(stage, "_INDEX_OK"), "w") as f:
-        f.write("ok\n")
-    _publish_index(stage, index_path, nonce)
-    return len(deltas)
+    """Fold deltas into a fresh base and PRUNE window rows of
+    over-cap hashes (folded df > max_df or tot > max_occ — lossless
+    for every query this index can serve, per the append-only
+    monotonicity argument). Stats rows are kept in full, so later
+    ingests still see pruned hashes as over-cap instead of
+    rediscovering them. Returns the number of generations folded."""
+
+    def write(stage: str) -> None:
+        man = manifest(index_path)
+        stats = _index_stats(spark, index_path).persist()
+        try:
+            keep = (stats.filter((F.col("df") <= man["max_df"])
+                                 & (F.col("tot") <= man["max_occ"]))
+                    .select("win_hash"))
+            w = _index_windows(spark, index_path).join(keep, "win_hash")
+            (w.repartition("win_hash")
+             .write.mode("overwrite").parquet(f"{stage}/windows"))
+            stats.write.mode("overwrite").parquet(f"{stage}/stats")
+        finally:
+            stats.unpersist()
+        lsm.write_json(stage, "substring_manifest.json", man)
+
+    return lsm.compact(index_path, write)

@@ -4,9 +4,8 @@
 docs for these terms" by tokenizing the WHOLE corpus per query. A
 serving deployment asks the same question thousands of times a day
 against a corpus that only grows by deltas — it wants the postings
-materialized once and maintained, like the other served indexes in
-this package (operators/{ann_index,dedup_index,substring_index}.py;
-ONE publish/delta/tag protocol across all four, not four):
+materialized once and maintained as an LSM generation store
+(operators/lsm.py):
 
 - ``build_text_index``: tokenize the corpus once and persist
   ``postings/`` (term, doc_id, tf, dl) laid out by a term-hash
@@ -15,22 +14,16 @@ ONE publish/delta/tag protocol across all four, not four):
   partitions its terms live in) plus ``docs/`` (doc_id, dl — every
   live document, including ones with no query-term hits, because
   corpus stats N and total_tokens are part of the BM25 score).
-- ``upsert_text_index``: one delta generation per batch — update
-  rows re-define their doc's postings under the new text, delete
-  ids remove theirs; every touched id gets a generation-stamped
-  tombstone and readers drop any older-generation row a later
-  tombstone names (the exact reconciliation rule of
-  ann_index._live_vectors, re-used shape-for-shape). Atomic
-  nonce-stage rename; ``tag`` rides the delta for the shared
-  writer-idempotence contract.
+- ``upsert_text_index``: one tombstoned delta generation per batch —
+  update rows re-define their doc's postings under the new text,
+  delete ids remove theirs.
 - ``search_text_index``: Okapi BM25 top-k per term served from the
   reconciled state, in the SAME exact-integer formulation as the
   batch query (one IEEE division of two exact BIGINTs — see
   plans/search_queries.py for the derivation), so served results
   are bit-identical to a from-scratch run over the visible corpus.
-- ``compact_text_index``: fold live rows into a fresh base (atomic
-  double-rename publish), dropping shadowed/tombstoned rows; live
-  writer tags persist to the sibling manifest first.
+- ``compact_text_index``: fold live rows into a fresh base,
+  dropping shadowed/tombstoned rows.
 
 df and corpus stats are DERIVED AT READ TIME from the reconciled
 postings/docs, never stored: under upserts and deletes a stored df
@@ -52,33 +45,20 @@ contract re-expressed over plain partitioned parquet.
 
 from __future__ import annotations
 
-import json
 import os
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ann_index import (
-    _delta_dirs,
-    _nonce,
-    _persist_tags,
-    _publish_index,
-    _reap_stale_delta_stages,
-    _reap_stale_dirs,
-    applied_tags,
-    delta_tags,
-    index_ok,
-)
-from .broadcast import hint_broadcast_if_small
+from . import lsm
 from ..functions.text import tokens
 
 _MANIFEST = "text_manifest.json"
 
 
-def _manifest(index_path: str) -> dict:
-    with open(os.path.join(index_path, _MANIFEST)) as f:
-        return json.load(f)
+def manifest(index_path: str) -> dict:
+    return lsm.read_json(index_path, _MANIFEST)
 
 
 def _bucket(term_col, n_buckets: int):
@@ -144,26 +124,23 @@ def build_text_index(corpus: DataFrame, index_path: str,
                      text_col: str = "text", id_col: str = "doc_id",
                      n_buckets: int = 64, positions: bool = False,
                      store_text: bool = False) -> None:
-    """Tokenize the corpus once and publish the inverted index
-    (atomic nonce-stage rename — a crashed build is invisible).
+    """Tokenize the corpus once and publish the inverted index.
     ``n_buckets`` pins the term-hash partition layout in the
     manifest; every later generation writes the same layout so
     query-time pruning applies uniformly. ``positions`` pins the
     positional-postings layout (required for phrase queries) —
     every later upsert writes it too."""
-    _reap_stale_dirs(index_path)
-    nonce = _nonce()
-    stage = f"{index_path}.build-{nonce}"
     posts, docs = _postings(corpus, text_col, id_col, n_buckets,
                             positions, store_text)
-    _write_gen(posts, docs, stage)
-    with open(os.path.join(stage, _MANIFEST), "w") as f:
-        json.dump({"id_col": id_col, "text_col": text_col,
-                   "n_buckets": n_buckets, "positions": positions,
-                   "store_text": store_text}, f)
-    with open(os.path.join(stage, "_INDEX_OK"), "w") as f:
-        f.write("ok\n")
-    _publish_index(stage, index_path, nonce)
+
+    def write(stage: str) -> None:
+        _write_gen(posts, docs, stage)
+        lsm.write_json(stage, _MANIFEST,
+                       {"id_col": id_col, "text_col": text_col,
+                        "n_buckets": n_buckets, "positions": positions,
+                        "store_text": store_text})
+
+    lsm.publish_base(index_path, write)
 
 
 def upsert_text_index(spark: SparkSession, index_path: str,
@@ -176,65 +153,26 @@ def upsert_text_index(spark: SparkSession, index_path: str,
     number. Work is proportional to the batch: one tokenize pass
     over ``updates`` and a bucket-partitioned write; tombstones are
     id-only."""
-    if updates is None and delete_ids is None:
-        raise ValueError("upsert_text_index: nothing to apply "
-                         "(updates and delete_ids both None)")
-    if not index_ok(index_path):
-        raise FileNotFoundError(f"no published index at {index_path}")
-    man = _manifest(index_path)
-    deltas = _delta_dirs(index_path)
-    seq = (deltas[-1][0] + 1) if deltas else 1
-    root = os.path.join(index_path, "deltas")
-    os.makedirs(root, exist_ok=True)
-    _reap_stale_delta_stages(index_path)
-    nonce = _nonce()
-    stage = os.path.join(root, f".stage-{nonce}")
-    final = os.path.join(root, f"delta-{seq:06d}-{nonce}")
+    man = manifest(index_path)
 
-    tomb_frames = []
-    if updates is not None:
-        tomb_frames.append(
-            updates.select(F.col(man["id_col"]).alias("doc_id"))
-            .distinct())
-        # the ann_index empty-frame lesson: a partitioned write with
-        # zero rows leaves a file-less dir that poisons later reads
-        if updates.isEmpty():
-            updates = None
-    if updates is not None:
+    def write_rows(stage: str) -> None:
         posts, docs = _postings(updates, man["text_col"],
                                 man["id_col"], man["n_buckets"],
                                 man.get("positions", False),
                                 man.get("store_text", False))
         _write_gen(posts, docs, stage)
-    if delete_ids is not None:
-        if isinstance(delete_ids, DataFrame):
-            dels = delete_ids.toDF("doc_id").distinct()
-        else:
-            id_type = spark.read.parquet(f"{index_path}/docs") \
-                .schema["doc_id"].dataType
-            from pyspark.sql import types as T
-            dels = spark.createDataFrame(
-                [(i,) for i in delete_ids],
-                T.StructType([T.StructField("doc_id", id_type)]))
-        tomb_frames.append(dels)
-    tomb = reduce(lambda a, b: a.unionByName(b), tomb_frames)
-    tomb.distinct().coalesce(1).write.mode("overwrite") \
-        .parquet(f"{stage}/tombstones")
-    if tag is not None:
-        with open(os.path.join(stage, "_TAG"), "w") as f:
-            f.write(tag + "\n")
-    with open(os.path.join(stage, "_DELTA_OK"), "w") as f:
-        f.write("ok\n")
-    os.rename(stage, final)
-    return seq
+
+    touched = None if updates is None else \
+        updates.select(F.col(man["id_col"]).alias("doc_id"))
+    return lsm.upsert(spark, index_path, "doc_id", touched, delete_ids,
+                      write_rows, "docs", tag)
 
 
 def _reconcile(spark: SparkSession, index_path: str, sub: str,
                buckets: list[int] | None = None) -> DataFrame:
     """Reconciled view of ``sub`` ("postings" or "docs") across base
-    + deltas: a row is live iff no LATER generation tombstoned its
-    doc_id. With no deltas this is the plain base scan. ``buckets``
-    prunes postings partitions on every generation."""
+    + deltas. ``buckets`` prunes postings partitions on every
+    generation."""
 
     def scan(path: str) -> DataFrame:
         df = spark.read.parquet(path)
@@ -242,26 +180,7 @@ def _reconcile(spark: SparkSession, index_path: str, sub: str,
             df = df.filter(F.col("bucket").isin(buckets))
         return df
 
-    base = scan(f"{index_path}/{sub}")
-    deltas = _delta_dirs(index_path)
-    if not deltas:
-        return base
-    frames = [base.withColumn("_gen", F.lit(0))]
-    tombs = []
-    for seq, d in deltas:
-        sdir = os.path.join(d, sub)
-        if os.path.isdir(sdir):          # pure-delete deltas have none
-            frames.append(scan(sdir).withColumn("_gen", F.lit(seq)))
-        tombs.append(spark.read.parquet(os.path.join(d, "tombstones"))
-                     .select(F.col("doc_id").alias("_t_id"),
-                             F.lit(seq).alias("_t_gen")))
-    allr = reduce(lambda a, b: a.unionByName(b), frames)
-    tomb = hint_broadcast_if_small(
-        reduce(lambda a, b: a.unionByName(b), tombs))
-    live = allr.join(
-        tomb, (allr["doc_id"] == tomb["_t_id"]) &
-              (tomb["_t_gen"] > allr["_gen"]), "left_anti")
-    return live.drop("_gen")
+    return lsm.live_rows(spark, index_path, sub, "doc_id", scan)
 
 
 def bm25_exact_score(tf, df, dl, n_docs, total_toks):
@@ -292,9 +211,9 @@ def search_text_index(spark: SparkSession, index_path: str,
     tiebreak."""
     from pyspark.sql import Window
 
-    if not index_ok(index_path):
+    if not lsm.index_ok(index_path):
         raise FileNotFoundError(f"no published index at {index_path}")
-    man = _manifest(index_path)
+    man = manifest(index_path)
     terms = list(terms)
     bks = _term_buckets(spark, terms, man["n_buckets"])
     hits = (_reconcile(spark, index_path, "postings", buckets=bks)
@@ -375,9 +294,9 @@ def search_text_index_docs(spark: SparkSession, index_path: str,
 
     from .windowed_agg import sum_exact
 
-    if not index_ok(index_path):
+    if not lsm.index_ok(index_path):
         raise FileNotFoundError(f"no published index at {index_path}")
-    man = _manifest(index_path)
+    man = manifest(index_path)
     terms = list(terms)
     bks = _term_buckets(spark, terms, man["n_buckets"])
     hits = (_reconcile(spark, index_path, "postings", buckets=bks)
@@ -433,9 +352,9 @@ def _phrase_matches(spark: SparkSession, index_path: str,
     """(phrase, doc_id, n_occurrences, first_pos) — the phrase
     result including the first occurrence's 0-based token offset
     (what snippet generation anchors on)."""
-    if not index_ok(index_path):
+    if not lsm.index_ok(index_path):
         raise FileNotFoundError(f"no published index at {index_path}")
-    man = _manifest(index_path)
+    man = manifest(index_path)
     if not man.get("positions", False):
         raise ValueError(
             "phrase queries need a positional index: rebuild with "
@@ -489,7 +408,7 @@ def search_text_index_snippets(spark: SparkSession, index_path: str,
     position intersects) plus ONE doc-keyed join of the match set
     against stored docs rows and a pure-JVM tokenize/slice/join —
     match-set-sized, not corpus-sized."""
-    man = _manifest(index_path)
+    man = manifest(index_path)
     if not man.get("store_text", False):
         raise ValueError(
             "snippets need stored text: rebuild with "
@@ -530,7 +449,7 @@ def text_index_stats(spark: SparkSession, index_path: str) -> DataFrame:
     shadowed/tombstoned scan waste a compaction reclaims)."""
     base = spark.read.parquet(f"{index_path}/postings")
     dframes = [spark.read.parquet(os.path.join(d, "postings"))
-               for _, d in _delta_dirs(index_path)
+               for _, d in lsm.generations(index_path)
                if os.path.isdir(os.path.join(d, "postings"))]
     n_delta = (reduce(lambda a, b: a.unionByName(b), dframes).count()
                if dframes else 0)
@@ -547,31 +466,18 @@ def text_index_stats(spark: SparkSession, index_path: str) -> DataFrame:
                     .alias("n_postings_base"),
                     F.lit(n_delta).cast("long").alias("n_postings_delta"),
                     "n_terms_live",
-                    F.lit(len(_delta_dirs(index_path))).cast("long")
+                    F.lit(len(lsm.generations(index_path))).cast("long")
                     .alias("n_deltas")))
 
 
 def compact_text_index(spark: SparkSession, index_path: str) -> int:
-    """Fold every delta into a fresh base (atomic double-rename
-    publish): live postings re-laid-out by bucket, live docs, no
-    tombstones. Live writer tags persist to the sibling manifest
-    first (the shared idempotence contract). Returns the number of
+    """Fold every delta into a fresh base: live postings re-laid-out
+    by bucket, live docs, no tombstones. Returns the number of
     generations folded (0 = no-op)."""
-    deltas = _delta_dirs(index_path)
-    if not deltas:
-        return 0
-    man = _manifest(index_path)
-    if delta_tags(index_path):
-        _persist_tags(index_path, applied_tags(index_path))
-    _reap_stale_dirs(index_path)
-    _reap_stale_delta_stages(index_path)
-    nonce = _nonce()
-    stage = f"{index_path}.build-{nonce}"
-    _write_gen(_reconcile(spark, index_path, "postings"),
-               _reconcile(spark, index_path, "docs"), stage)
-    with open(os.path.join(stage, _MANIFEST), "w") as f:
-        json.dump(man, f)
-    with open(os.path.join(stage, "_INDEX_OK"), "w") as f:
-        f.write("ok\n")
-    _publish_index(stage, index_path, nonce)
-    return len(deltas)
+
+    def write(stage: str) -> None:
+        _write_gen(_reconcile(spark, index_path, "postings"),
+                   _reconcile(spark, index_path, "docs"), stage)
+        lsm.write_json(stage, _MANIFEST, manifest(index_path))
+
+    return lsm.compact(index_path, write)

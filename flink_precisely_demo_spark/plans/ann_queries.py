@@ -34,7 +34,7 @@ _INDEX_CACHE: dict[str, str] = {}
 
 def ann_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per process+dataset) and return the index path."""
-    from ..operators.ann_index import index_ok
+    from ..operators.lsm import index_ok
 
     cached = _INDEX_CACHE.get(sf_dir)
     if cached is None or not index_ok(cached):
@@ -123,34 +123,32 @@ def _upsert_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Clone the shared as-built index and apply the two fixed delta
     generations (once per process+dataset; the post-upsert state is
     deterministic, so a marker-bearing dir with exactly 2 published
-    deltas is reusable across processes). The clone+mutate stages
-    under a nonce ``.build-`` dir and publishes via the index's own
-    atomic double-rename — a concurrent process querying the shared
-    path never sees a half-copied index, and a crashed rebuild leaves
-    only a reapable staging dir (r12 advisory)."""
+    deltas is reusable across processes). The clone+mutate publishes
+    as one LSM base (operators/lsm.py) — a concurrent process
+    querying the shared path never sees a half-copied index."""
     import shutil
 
-    from ..operators.ann_index import (_delta_dirs, _nonce,
-                                       _publish_index, _reap_stale_dirs,
-                                       index_ok, upsert_ann_index)
+    from ..operators.ann_index import upsert_ann_index
+    from ..operators.lsm import generations, index_ok, publish_base
 
     cached = _UPSERT_CACHE.get(sf_dir)
     if cached is None:
         slug = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.strip("/"))
         path = os.path.join(tempfile.gettempdir(), f"ann_upsert_{slug}")
-        if not (index_ok(path) and len(_delta_dirs(path)) == 2):
-            _reap_stale_dirs(path)
-            nonce = _nonce()
-            stage = f"{path}.build-{nonce}"
-            shutil.copytree(ann_index_path(spark, sf_dir), stage)
-            emb = load_table(spark, sf_dir, "embeddings")
-            g1 = emb.filter(F.col("vec_id").between(100, 149)).select(
-                "vec_id", F.reverse("embedding").alias("embedding"))
-            upsert_ann_index(spark, stage, g1, delete_ids=range(150, 155))
-            g2 = emb.filter(F.col("vec_id").between(140, 151)) \
-                    .select("vec_id", "embedding")
-            upsert_ann_index(spark, stage, g2, delete_ids=range(480, 490))
-            _publish_index(stage, path, nonce)
+        if not (index_ok(path) and len(generations(path)) == 2):
+            def write(stage: str) -> None:
+                shutil.copytree(ann_index_path(spark, sf_dir), stage)
+                emb = load_table(spark, sf_dir, "embeddings")
+                g1 = emb.filter(F.col("vec_id").between(100, 149)).select(
+                    "vec_id", F.reverse("embedding").alias("embedding"))
+                upsert_ann_index(spark, stage, g1,
+                                 delete_ids=range(150, 155))
+                g2 = emb.filter(F.col("vec_id").between(140, 151)) \
+                        .select("vec_id", "embedding")
+                upsert_ann_index(spark, stage, g2,
+                                 delete_ids=range(480, 490))
+
+            publish_base(path, write)
         _UPSERT_CACHE[sf_dir] = path
     return _UPSERT_CACHE[sf_dir]
 
@@ -315,54 +313,46 @@ def _stream_upsert_index_path(spark: SparkSession, sf_dir: str) -> str:
     ``compact_every=2`` — so the final state is a COMPACTED base
     (0 deltas) whose applied-batch manifest records both triggers;
     that end state is deterministic, making the dir reusable across
-    processes (mirrors _upsert_index_path's reuse rule)."""
+    processes (mirrors _upsert_index_path's reuse rule). The sink
+    runs against the publish stage, so its applied manifest follows
+    the index into place."""
     import shutil
 
-    from ..operators.ann_index import _delta_dirs, index_ok
-    from ..streaming.ann_upsert import _applied_tags, run_ann_upsert
+    from ..operators.lsm import (applied_tags, generations, index_ok,
+                                 publish_base)
+    from ..streaming.ann_upsert import run_ann_upsert
     from ..streaming.replay_stage import stage_trigger_files
-
-    from ..operators.ann_index import (_manifest_path, _nonce,
-                                       _publish_index, _reap_stale_dirs)
 
     cached = _STREAM_UPSERT_CACHE.get(sf_dir)
     if cached is None:
         slug = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.strip("/"))
         path = os.path.join(tempfile.gettempdir(), f"ann_supsert_{slug}")
-        if not (index_ok(path) and not _delta_dirs(path)
-                and _applied_tags(path) >= {"b0", "b1"}):
-            # stage under a nonce dir + publish by rename, like
-            # _upsert_index_path (r12 advisory): the sink runs
-            # against the STAGE, so its manifest lands at the
-            # stage's sibling path and moves into place after the
-            # index publish — a concurrent reader of the shared
-            # path never sees a half-drained index
-            _reap_stale_dirs(path)
-            nonce = _nonce()
-            stage = f"{path}.build-{nonce}"
-            shutil.copytree(ann_index_path(spark, sf_dir), stage)
-            work = scratch_dir(prefix="ann_upsert_replay_")
-            try:
-                feed_dir = stage_trigger_files(
-                    _mutation_feed(spark, sf_dir), work, F.col("b"),
-                    "mutations")
-                # schema from the staged files, not a literal: the
-                # embeddings table's element type differs across
-                # generated scale dirs (float at the bench SFs,
-                # double at sf1/sf10), and a float schema over
-                # double-physical parquet fails the vectorized
-                # reader (caught by the r12 sf10 sweep)
-                schema = spark.read.parquet(feed_dir).schema
-                feed = (spark.readStream.schema(schema)
-                        .option("maxFilesPerTrigger", 1)
-                        .parquet(feed_dir))
-                run_ann_upsert(feed, stage,
-                               checkpoint=os.path.join(work, "ckpt"),
-                               compact_every=2)
-            finally:
-                shutil.rmtree(work, ignore_errors=True)
-            _publish_index(stage, path, nonce)
-            os.replace(_manifest_path(stage), _manifest_path(path))
+        if not (index_ok(path) and not generations(path)
+                and applied_tags(path) >= {"b0", "b1"}):
+            def write(stage: str) -> None:
+                shutil.copytree(ann_index_path(spark, sf_dir), stage)
+                work = scratch_dir(prefix="ann_upsert_replay_")
+                try:
+                    feed_dir = stage_trigger_files(
+                        _mutation_feed(spark, sf_dir), work, F.col("b"),
+                        "mutations")
+                    # schema from the staged files, not a literal: the
+                    # embeddings table's element type differs across
+                    # generated scale dirs (float at the bench SFs,
+                    # double at sf1/sf10), and a float schema over
+                    # double-physical parquet fails the vectorized
+                    # reader (caught by the r12 sf10 sweep)
+                    schema = spark.read.parquet(feed_dir).schema
+                    feed = (spark.readStream.schema(schema)
+                            .option("maxFilesPerTrigger", 1)
+                            .parquet(feed_dir))
+                    run_ann_upsert(feed, stage,
+                                   checkpoint=os.path.join(work, "ckpt"),
+                                   compact_every=2)
+                finally:
+                    shutil.rmtree(work, ignore_errors=True)
+
+            publish_base(path, write)
         _STREAM_UPSERT_CACHE[sf_dir] = path
     return _STREAM_UPSERT_CACHE[sf_dir]
 

@@ -744,18 +744,18 @@ def _corpus_pipeline_root(spark: SparkSession, sf_dir: str) -> str:
     benchmark split (raw documents with doc_id % 7 == 3 — overlaps
     both the historical corpus and the stream, so benchmark documents
     crawled into the feed are cut, the real leakage story).
-    Everything stages under a nonce dir with ONE atomic publish — a
-    published root is by construction a fully-drained pipeline, so
-    completeness is just the markers."""
+    Everything runs in the stage of ONE LSM base publish
+    (operators/lsm.py) — a published root is by construction a
+    fully-drained pipeline, so completeness is just the markers."""
     import os
     import re
     import shutil
     import tempfile
 
-    from ..operators.ann_index import (_nonce, _publish_index,
-                                       _reap_stale_dirs, build_ann_index,
-                                       index_ok)
+    from ..operators.ann_index import build_ann_index
     from ..operators.dedup_index import build_band_index
+    from ..operators.lsm import index_ok, publish_base
+    from ..operators.text_index import build_text_index
     from ..streaming.corpus_pipeline import (DEFAULT_QUALITY_GATE,
                                              run_corpus_ingest,
                                              synthesize_documents_envelope)
@@ -775,49 +775,47 @@ def _corpus_pipeline_root(spark: SparkSession, sf_dir: str) -> str:
         dec = os.path.join(path, "decontam")
         if not (index_ok(band) and index_ok(ann) and index_ok(tixp)
                 and os.path.isdir(verd) and os.path.isdir(dec)):
-            _reap_stale_dirs(path)
-            nonce = _nonce()
-            stage = f"{path}.build-{nonce}"
-            shutil.rmtree(stage, ignore_errors=True)
-            os.makedirs(stage)
-            docs = load_table(spark, sf_dir, "documents") \
-                .select("doc_id", "text")
-            emb = load_table(spark, sf_dir, "embeddings") \
-                .select(F.col("vec_id").alias("doc_id"), "embedding")
-            gate = ((quality_score("text") >= F.lit(DEFAULT_QUALITY_GATE))
-                    & (language_id("text") != F.lit("und")))
-            hist = docs.filter((F.col("doc_id") % 5 != 0) & gate)
-            build_band_index(hist, os.path.join(stage, "band_index"))
-            build_ann_index(hist.select("doc_id").join(emb, "doc_id"),
-                            os.path.join(stage, "ann_index"),
-                            id_col="doc_id")
-            from ..operators.text_index import build_text_index
-            build_text_index(hist, os.path.join(stage, "text_index"))
-            work = scratch_dir(prefix="corpus_pipe_replay_")
-            try:
-                feed_dir = stage_trigger_text_files(
-                    synthesize_documents_envelope(
-                        docs.filter(F.col("doc_id") % 5 == 0),
-                        extra_cols=[
-                            F.when(F.col("doc_id") % 10 == 0, 0)
-                            .otherwise(1).alias("b")]),
-                    work, F.col("b"), "cdc_docs")
-                raw = (spark.readStream.format("text")
-                       .option("maxFilesPerTrigger", 1).load(feed_dir))
-                run_corpus_ingest(raw, os.path.join(stage, "band_index"),
-                                  os.path.join(stage, "ann_index"),
-                                  os.path.join(stage, "verdicts"), emb,
-                                  checkpoint=os.path.join(work, "ckpt"),
-                                  compact_every=2,
-                                  benchmark=docs.filter(
-                                      F.col("doc_id") % 7 == 3),
-                                  decontam_path=os.path.join(
-                                      stage, "decontam"),
-                                  text_index_path=os.path.join(
-                                      stage, "text_index"))
-            finally:
-                shutil.rmtree(work, ignore_errors=True)
-            _publish_index(stage, path, nonce)
+            def write(stage: str) -> None:
+                os.makedirs(stage)
+                docs = load_table(spark, sf_dir, "documents") \
+                    .select("doc_id", "text")
+                emb = load_table(spark, sf_dir, "embeddings") \
+                    .select(F.col("vec_id").alias("doc_id"), "embedding")
+                gate = ((quality_score("text")
+                         >= F.lit(DEFAULT_QUALITY_GATE))
+                        & (language_id("text") != F.lit("und")))
+                hist = docs.filter((F.col("doc_id") % 5 != 0) & gate)
+                build_band_index(hist, os.path.join(stage, "band_index"))
+                build_ann_index(hist.select("doc_id").join(emb, "doc_id"),
+                                os.path.join(stage, "ann_index"),
+                                id_col="doc_id")
+                build_text_index(hist, os.path.join(stage, "text_index"))
+                work = scratch_dir(prefix="corpus_pipe_replay_")
+                try:
+                    feed_dir = stage_trigger_text_files(
+                        synthesize_documents_envelope(
+                            docs.filter(F.col("doc_id") % 5 == 0),
+                            extra_cols=[
+                                F.when(F.col("doc_id") % 10 == 0, 0)
+                                .otherwise(1).alias("b")]),
+                        work, F.col("b"), "cdc_docs")
+                    raw = (spark.readStream.format("text")
+                           .option("maxFilesPerTrigger", 1)
+                           .load(feed_dir))
+                    run_corpus_ingest(
+                        raw, os.path.join(stage, "band_index"),
+                        os.path.join(stage, "ann_index"),
+                        os.path.join(stage, "verdicts"), emb,
+                        checkpoint=os.path.join(work, "ckpt"),
+                        compact_every=2,
+                        benchmark=docs.filter(F.col("doc_id") % 7 == 3),
+                        decontam_path=os.path.join(stage, "decontam"),
+                        text_index_path=os.path.join(stage,
+                                                     "text_index"))
+                finally:
+                    shutil.rmtree(work, ignore_errors=True)
+
+            publish_base(path, write)
         _CORPUS_PIPE_CACHE[sf_dir] = path
     return _CORPUS_PIPE_CACHE[sf_dir]
 
@@ -925,7 +923,7 @@ def _streaming_corpus_ingest_replay(spark: SparkSession,
     compaction amortized across triggers."""
     import os
 
-    from ..operators.ann_index import _live_vectors
+    from ..operators.lsm import live_rows
 
     root = _corpus_pipeline_root(spark, sf_dir)
     streamed = load_table(spark, sf_dir, "documents") \
@@ -934,13 +932,12 @@ def _streaming_corpus_ingest_replay(spark: SparkSession,
          .select("doc_id", F.col("is_novel").alias("__nov"), "dup_of"))
     dec = (spark.read.parquet(os.path.join(root, "decontam"))
            .select("doc_id", F.lit(True).alias("__dec")))
-    live = _live_vectors(spark, os.path.join(root, "ann_index"),
-                         "doc_id", "embedding") \
+    live = live_rows(spark, os.path.join(root, "ann_index"), "vectors",
+                     "doc_id") \
         .select("doc_id", F.lit(True).alias("__idx"))
-    from ..operators.text_index import _reconcile
-    srch = _reconcile(spark, os.path.join(root, "text_index"),
-                      "docs").select("doc_id",
-                                     F.lit(True).alias("__srch"))
+    srch = live_rows(spark, os.path.join(root, "text_index"), "docs",
+                     "doc_id").select("doc_id",
+                                      F.lit(True).alias("__srch"))
     return (streamed
             .join(v, "doc_id", "left")
             .join(dec, "doc_id", "left")

@@ -573,7 +573,8 @@ def _band_index_path(spark: SparkSession, sf_dir: str) -> str:
     import re
     import tempfile
 
-    from ..operators.dedup_index import build_band_index, index_ok
+    from ..operators.dedup_index import build_band_index
+    from ..operators.lsm import index_ok
 
     def _ok(p: str) -> bool:
         # clusters/ required since r14: the streaming ingest fixture
@@ -663,52 +664,48 @@ def _ingest_cluster_path(spark: SparkSession, sf_dir: str) -> str:
     edge-carrying deltas, and a final compaction folds the union-find
     forest — so the published index's ``clusters/`` is the maintained
     membership after build + 2 ingests + compact. Everything runs
-    against a nonce-staged dir with ONE atomic publish at the end
-    (the ann-queries staging rule), so a concurrent process never
-    observes a half-ingested index."""
+    against the stage of ONE LSM base publish (operators/lsm.py), so
+    a concurrent process never observes a half-ingested index."""
     import os
     import re
     import tempfile
 
-    from ..operators.ann_index import (_delta_dirs, _manifest_path,
-                                       _nonce, _publish_index,
-                                       _reap_stale_dirs, applied_tags,
-                                       index_ok)
     from ..operators.dedup import _minhash_banded
     from ..operators.dedup_index import (append_bands, build_band_index,
                                          compact_band_index,
                                          ingest_cluster_edges)
+    from ..operators.lsm import (applied_tags, generations, index_ok,
+                                 publish_base)
 
     cached = _INGEST_CLUSTER_CACHE.get(sf_dir)
     if cached is None:
         slug = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.strip("/"))
         path = os.path.join(tempfile.gettempdir(),
                             f"band_clusters_{slug}")
-        complete = (index_ok(path) and not _delta_dirs(path)
+        complete = (index_ok(path) and not generations(path)
                     and applied_tags(path) >= {"w0", "w1"}
                     and os.path.isdir(os.path.join(path, "clusters")))
         if not complete:
-            _reap_stale_dirs(path)
-            nonce = _nonce()
-            stage = f"{path}.build-{nonce}"
-            docs = load_table(spark, sf_dir, "documents") \
-                .select("doc_id", "text")
-            build_band_index(docs.filter(F.col("doc_id") % 5 != 0),
-                             stage, clusters=True)
-            for wave, mod in ((0, 0), (1, 5)):
-                batch = docs.filter(F.col("doc_id") % 10 == mod)
-                banded = _minhash_banded(batch, "text", "doc_id",
-                                         16, 4, 3).persist()
-                try:
-                    edges = ingest_cluster_edges(spark, stage,
-                                                 banded=banded)
-                    append_bands(spark, stage, batch, tag=f"w{wave}",
-                                 banded=banded, cluster_edges=edges)
-                finally:
-                    banded.unpersist()
-            compact_band_index(spark, stage)
-            _publish_index(stage, path, nonce)
-            os.replace(_manifest_path(stage), _manifest_path(path))
+            def write(stage: str) -> None:
+                docs = load_table(spark, sf_dir, "documents") \
+                    .select("doc_id", "text")
+                build_band_index(docs.filter(F.col("doc_id") % 5 != 0),
+                                 stage, clusters=True)
+                for wave, mod in ((0, 0), (1, 5)):
+                    batch = docs.filter(F.col("doc_id") % 10 == mod)
+                    banded = _minhash_banded(batch, "text", "doc_id",
+                                             16, 4, 3).persist()
+                    try:
+                        edges = ingest_cluster_edges(spark, stage,
+                                                     banded=banded)
+                        append_bands(spark, stage, batch,
+                                     tag=f"w{wave}", banded=banded,
+                                     cluster_edges=edges)
+                    finally:
+                        banded.unpersist()
+                compact_band_index(spark, stage)
+
+            publish_base(path, write)
         _INGEST_CLUSTER_CACHE[sf_dir] = path
     return _INGEST_CLUSTER_CACHE[sf_dir]
 
@@ -820,18 +817,17 @@ def _stream_ingest_paths(spark: SparkSession, sf_dir: str
     ``compact_every=2``; returns (index_path, verdicts_path). The
     end state is deterministic (compacted base absorbing both waves,
     manifest recording both tags, verdict dirs for both batches), so
-    the pair of dirs is reusable across processes; the clone stages
-    under a nonce dir and publishes by rename (the
-    ann-queries staging rule)."""
+    the pair of dirs is reusable across processes. The clone is the
+    stage of one LSM base publish (operators/lsm.py), and the
+    verdicts sit beside it at ``<stage>.verdicts`` so they move into
+    place with the index."""
     import os
     import re
     import shutil
     import tempfile
 
-    from ..operators.ann_index import (_delta_dirs, _manifest_path,
-                                       _nonce, _publish_index,
-                                       _reap_stale_dirs, applied_tags,
-                                       index_ok)
+    from ..operators.lsm import (applied_tags, generations, index_ok,
+                                 publish_base)
     from ..streaming.dedup_ingest import run_dedup_ingest
     from ..streaming.replay_stage import stage_trigger_files
 
@@ -841,7 +837,7 @@ def _stream_ingest_paths(spark: SparkSession, sf_dir: str
         path = os.path.join(tempfile.gettempdir(),
                             f"band_singest_{slug}")
         vpath = path + ".verdicts"
-        complete = (index_ok(path) and not _delta_dirs(path)
+        complete = (index_ok(path) and not generations(path)
                     and applied_tags(path) >= {"b0", "b1"}
                     # r14: the cloned index carries cluster state and
                     # the sink maintains it — pre-r14 cached end
@@ -850,46 +846,28 @@ def _stream_ingest_paths(spark: SparkSession, sf_dir: str
                     and all(os.path.isdir(os.path.join(vpath, f"batch={b}"))
                             for b in (0, 1)))
         if not complete:
-            _reap_stale_dirs(path)
-            nonce = _nonce()
-            stage = f"{path}.build-{nonce}"
-            svpath = stage + ".verdicts"
-            shutil.rmtree(svpath, ignore_errors=True)
-            shutil.copytree(_band_index_path(spark, sf_dir), stage)
-            work = scratch_dir(prefix="dedup_ingest_replay_")
-            try:
-                batch = load_table(spark, sf_dir, "documents") \
-                    .filter(F.col("doc_id") % 5 == 0) \
-                    .select("doc_id", "text")
-                feed_dir = stage_trigger_files(
-                    batch, work,
-                    F.when(F.col("doc_id") % 10 == 0, 0).otherwise(1),
-                    "docs")
-                schema = spark.read.parquet(feed_dir).schema
-                feed = (spark.readStream.schema(schema)
-                        .option("maxFilesPerTrigger", 1)
-                        .parquet(feed_dir))
-                run_dedup_ingest(feed, stage, svpath,
-                                 checkpoint=os.path.join(work, "ckpt"),
-                                 compact_every=2)
-            finally:
-                shutil.rmtree(work, ignore_errors=True)
-            _publish_index(stage, path, nonce)
-            os.replace(_manifest_path(stage), _manifest_path(path))
-            # verdicts swap with the same rename-aside protocol as the
-            # index publish (r13 advice): rmtree-then-rename left a
-            # window where a concurrent completeness check saw the
-            # verdicts missing while the index looked complete. Two
-            # renames shrink that window to nothing observable (no
-            # bulk delete between them); the aside dir is reaped last.
-            # aside name matches _reap_stale_dirs' "<base>.old-<pid>-"
-            # pattern so a crash between the renames leaves reapable
-            # litter, not a permanent orphan
-            vold = f"{path}.old-{nonce}-verdicts"
-            if os.path.isdir(vpath):
-                os.rename(vpath, vold)
-            os.rename(svpath, vpath)
-            shutil.rmtree(vold, ignore_errors=True)
+            def write(stage: str) -> None:
+                shutil.copytree(_band_index_path(spark, sf_dir), stage)
+                work = scratch_dir(prefix="dedup_ingest_replay_")
+                try:
+                    batch = load_table(spark, sf_dir, "documents") \
+                        .filter(F.col("doc_id") % 5 == 0) \
+                        .select("doc_id", "text")
+                    feed_dir = stage_trigger_files(
+                        batch, work,
+                        F.when(F.col("doc_id") % 10 == 0, 0).otherwise(1),
+                        "docs")
+                    schema = spark.read.parquet(feed_dir).schema
+                    feed = (spark.readStream.schema(schema)
+                            .option("maxFilesPerTrigger", 1)
+                            .parquet(feed_dir))
+                    run_dedup_ingest(feed, stage, stage + ".verdicts",
+                                     checkpoint=os.path.join(work, "ckpt"),
+                                     compact_every=2)
+                finally:
+                    shutil.rmtree(work, ignore_errors=True)
+
+            publish_base(path, write)
         _STREAM_INGEST_CACHE[sf_dir] = (path, vpath)
     return _STREAM_INGEST_CACHE[sf_dir]
 
@@ -1168,20 +1146,18 @@ def _substring_index_path(spark: SparkSession, sf_dir: str) -> str:
     (%10==0, then %10==5) each running the against-corpus span query
     and appending its window delta (tagged), with a COMPACTION —
     exercising the over-cap prune and the post-prune append —
-    between them. Atomic nonce-stage publish; a published root is by
-    construction the fully-maintained end state."""
+    between them. One LSM base publish (operators/lsm.py): a
+    published root is by construction the fully-maintained end
+    state."""
     import os
     import re
     import tempfile
 
-    from ..operators.ann_index import (_manifest_path, _nonce,
-                                       _publish_index, _reap_stale_dirs,
-                                       applied_tags)
     from ..operators.dedup import sliding_window_hashes
+    from ..operators.lsm import applied_tags, index_ok, publish_base
     from ..operators.substring_index import (append_windows,
                                              build_substring_index,
                                              compact_substring_index,
-                                             index_ok,
                                              ingest_substring_spans)
 
     cached = _SUBSTRING_INDEX_CACHE.get(sf_dir)
@@ -1190,32 +1166,30 @@ def _substring_index_path(spark: SparkSession, sf_dir: str) -> str:
         path = os.path.join(tempfile.gettempdir(),
                             f"substring_index_{slug}")
         if not (index_ok(path) and applied_tags(path) >= {"w0", "w1"}):
-            _reap_stale_dirs(path)
-            nonce = _nonce()
-            stage = f"{path}.build-{nonce}"
-            docs = load_table(spark, sf_dir, "documents") \
-                .select("doc_id", "text")
-            build_substring_index(
-                docs.filter(F.col("doc_id") % 5 != 0), stage)
-            for wave, mod in ((0, 0), (1, 5)):
-                batch = docs.filter(F.col("doc_id") % 10 == mod)
-                w = sliding_window_hashes(batch, "text", "doc_id",
-                                          16).persist()
-                try:
-                    # the ingest read a real deployment runs per batch
-                    # (cross-side spans vs the absorbed corpus; the
-                    # cross-slice equality is pytest-pinned in
-                    # tests/test_substring_index.py)
-                    ingest_substring_spans(spark, stage, batch,
-                                           windows=w).count()
-                    append_windows(spark, stage, batch, tag=f"w{wave}",
-                                   windows=w)
-                finally:
-                    w.unpersist()
-                if wave == 0:
-                    compact_substring_index(spark, stage)
-            _publish_index(stage, path, nonce)
-            os.replace(_manifest_path(stage), _manifest_path(path))
+            def write(stage: str) -> None:
+                docs = load_table(spark, sf_dir, "documents") \
+                    .select("doc_id", "text")
+                build_substring_index(
+                    docs.filter(F.col("doc_id") % 5 != 0), stage)
+                for wave, mod in ((0, 0), (1, 5)):
+                    batch = docs.filter(F.col("doc_id") % 10 == mod)
+                    w = sliding_window_hashes(batch, "text", "doc_id",
+                                              16).persist()
+                    try:
+                        # the ingest read a real deployment runs per
+                        # batch (cross-side spans vs the absorbed
+                        # corpus; the cross-slice equality is
+                        # pytest-pinned in tests/test_substring_index.py)
+                        ingest_substring_spans(spark, stage, batch,
+                                               windows=w).count()
+                        append_windows(spark, stage, batch,
+                                       tag=f"w{wave}", windows=w)
+                    finally:
+                        w.unpersist()
+                    if wave == 0:
+                        compact_substring_index(spark, stage)
+
+            publish_base(path, write)
         _SUBSTRING_INDEX_CACHE[sf_dir] = path
     return _SUBSTRING_INDEX_CACHE[sf_dir]
 
@@ -1266,11 +1240,9 @@ def _stream_substring_index_path(spark: SparkSession, sf_dir: str) -> str:
     import shutil
     import tempfile
 
-    from ..operators.ann_index import (_manifest_path, _nonce,
-                                       _publish_index, _reap_stale_dirs,
-                                       applied_tags)
-    from ..operators.substring_index import (build_substring_index,
-                                             index_ok)
+    from ..operators.lsm import (applied_tags, generations, index_ok,
+                                 publish_base)
+    from ..operators.substring_index import build_substring_index
     from ..streaming.replay_stage import stage_trigger_files
     from ..streaming.substring_ingest import run_substring_ingest
 
@@ -1279,39 +1251,36 @@ def _stream_substring_index_path(spark: SparkSession, sf_dir: str) -> str:
         slug = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.strip("/"))
         path = os.path.join(tempfile.gettempdir(),
                             f"substring_sindex_{slug}")
-        from ..operators.ann_index import _delta_dirs
-        done = (index_ok(path) and not _delta_dirs(path)
+        done = (index_ok(path) and not generations(path)
                 and applied_tags(path) >= {"b0", "b1"})
         if not done:
-            _reap_stale_dirs(path)
-            nonce = _nonce()
-            stage = f"{path}.build-{nonce}"
-            docs = load_table(spark, sf_dir, "documents") \
-                .select("doc_id", "text")
-            build_substring_index(
-                docs.filter(F.col("doc_id") % 5 != 0), stage)
-            feed_df = (docs.filter(F.col("doc_id") % 10 == 0)
-                       .withColumn("b", F.lit(0))
-                       .unionByName(
-                           docs.filter(F.col("doc_id") % 10 == 5)
-                           .withColumn("b", F.lit(1))))
-            work = scratch_dir(prefix="substr_ingest_replay_")
-            try:
-                feed_dir = stage_trigger_files(feed_df, work,
-                                               F.col("b"), "docs")
-                feed = (spark.readStream
-                        .schema("doc_id long, text string, b int")
-                        .option("maxFilesPerTrigger", 1)
-                        .parquet(feed_dir))
-                run_substring_ingest(
-                    feed.select("doc_id", "text"), stage,
-                    checkpoint=os.path.join(work, "ckpt"),
-                    spans_out=os.path.join(work, "spans"),
-                    compact_every=2)
-            finally:
-                shutil.rmtree(work, ignore_errors=True)
-            _publish_index(stage, path, nonce)
-            os.replace(_manifest_path(stage), _manifest_path(path))
+            def write(stage: str) -> None:
+                docs = load_table(spark, sf_dir, "documents") \
+                    .select("doc_id", "text")
+                build_substring_index(
+                    docs.filter(F.col("doc_id") % 5 != 0), stage)
+                feed_df = (docs.filter(F.col("doc_id") % 10 == 0)
+                           .withColumn("b", F.lit(0))
+                           .unionByName(
+                               docs.filter(F.col("doc_id") % 10 == 5)
+                               .withColumn("b", F.lit(1))))
+                work = scratch_dir(prefix="substr_ingest_replay_")
+                try:
+                    feed_dir = stage_trigger_files(feed_df, work,
+                                                   F.col("b"), "docs")
+                    feed = (spark.readStream
+                            .schema("doc_id long, text string, b int")
+                            .option("maxFilesPerTrigger", 1)
+                            .parquet(feed_dir))
+                    run_substring_ingest(
+                        feed.select("doc_id", "text"), stage,
+                        checkpoint=os.path.join(work, "ckpt"),
+                        spans_out=os.path.join(work, "spans"),
+                        compact_every=2)
+                finally:
+                    shutil.rmtree(work, ignore_errors=True)
+
+            publish_base(path, write)
         _STREAM_SUBSTRING_CACHE[sf_dir] = path
     return _STREAM_SUBSTRING_CACHE[sf_dir]
 

@@ -273,18 +273,17 @@ def _text_index_path(spark: SparkSession, sf_dir: str) -> str:
     delta (updates % 12 == 1 with re-defined text + adds % 6 == 3 +
     deletes % 12 == 2, tag u1) left unfolded — so the served queries
     reconcile base + tombstoned delta state, not a fresh build.
-    Atomic nonce-stage publish; a published root is by construction
-    the fully-maintained end state."""
+    One LSM base publish (operators/lsm.py): a published root is by
+    construction the fully-maintained end state."""
     import os
     import re
     import tempfile
 
-    from ..operators.ann_index import (_manifest_path, _nonce,
-                                       _publish_index, _reap_stale_dirs,
-                                       applied_tags, delta_tags)
-    from ..operators.text_index import (_manifest, build_text_index,
-                                        compact_text_index,
-                                        index_ok, upsert_text_index)
+    from ..operators.lsm import (applied_tags, delta_tags, index_ok,
+                                 publish_base)
+    from ..operators.text_index import (build_text_index,
+                                        compact_text_index, manifest,
+                                        upsert_text_index)
 
     cached = _TEXT_INDEX_CACHE.get(sf_dir)
     if cached is None:
@@ -293,35 +292,32 @@ def _text_index_path(spark: SparkSession, sf_dir: str) -> str:
         done = (index_ok(path)
                 and (applied_tags(path) | delta_tags(path))
                 >= {"u0", "u1"}
-                and _manifest(path).get("positions", False)
-                and _manifest(path).get("store_text", False))
+                and manifest(path).get("positions", False)
+                and manifest(path).get("store_text", False))
         if not done:
-            _reap_stale_dirs(path)
-            nonce = _nonce()
-            stage = f"{path}.build-{nonce}"
-            docs = (load_table(spark, sf_dir, "documents")
-                    .select("doc_id", "text")
-                    .filter(F.col("text").isNotNull()))
-            build_text_index(docs.filter(F.col("doc_id") % 3 != 0),
-                             stage, positions=True, store_text=True)
-            upsert_text_index(
-                spark, stage,
-                updates=docs.filter(F.col("doc_id") % 6 == 0),
-                tag="u0")
-            compact_text_index(spark, stage)
-            upd = docs.filter(F.col("doc_id") % 12 == 1).select(
-                "doc_id", F.concat("text", F.lit(" refreshed copy"))
-                .alias("text"))
-            upsert_text_index(
-                spark, stage,
-                updates=upd.unionByName(
-                    docs.filter(F.col("doc_id") % 6 == 3)),
-                delete_ids=docs.filter(F.col("doc_id") % 12 == 2)
-                .select("doc_id"),
-                tag="u1")
-            _publish_index(stage, path, nonce)
-            if os.path.exists(_manifest_path(stage)):
-                os.replace(_manifest_path(stage), _manifest_path(path))
+            def write(stage: str) -> None:
+                docs = (load_table(spark, sf_dir, "documents")
+                        .select("doc_id", "text")
+                        .filter(F.col("text").isNotNull()))
+                build_text_index(docs.filter(F.col("doc_id") % 3 != 0),
+                                 stage, positions=True, store_text=True)
+                upsert_text_index(
+                    spark, stage,
+                    updates=docs.filter(F.col("doc_id") % 6 == 0),
+                    tag="u0")
+                compact_text_index(spark, stage)
+                upd = docs.filter(F.col("doc_id") % 12 == 1).select(
+                    "doc_id", F.concat("text", F.lit(" refreshed copy"))
+                    .alias("text"))
+                upsert_text_index(
+                    spark, stage,
+                    updates=upd.unionByName(
+                        docs.filter(F.col("doc_id") % 6 == 3)),
+                    delete_ids=docs.filter(F.col("doc_id") % 12 == 2)
+                    .select("doc_id"),
+                    tag="u1")
+
+            publish_base(path, write)
         _TEXT_INDEX_CACHE[sf_dir] = path
     return _TEXT_INDEX_CACHE[sf_dir]
 
@@ -467,12 +463,12 @@ def _stream_text_index_path(spark: SparkSession, sf_dir: str) -> str:
     deterministic, making the dir reusable across processes."""
     import os
     import re
+    import shutil
     import tempfile
 
-    from ..operators.ann_index import (_delta_dirs, _manifest_path,
-                                       _nonce, _publish_index,
-                                       _reap_stale_dirs, applied_tags)
-    from ..operators.text_index import build_text_index, index_ok
+    from ..operators.lsm import (applied_tags, generations, index_ok,
+                                 publish_base)
+    from ..operators.text_index import build_text_index
     from ..streaming.replay_stage import stage_trigger_files
     from ..streaming.text_index_ingest import run_text_index_ingest
 
@@ -481,61 +477,58 @@ def _stream_text_index_path(spark: SparkSession, sf_dir: str) -> str:
         slug = re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.strip("/"))
         path = os.path.join(tempfile.gettempdir(),
                             f"text_sindex_{slug}")
-        done = (index_ok(path) and not _delta_dirs(path)
+        done = (index_ok(path) and not generations(path)
                 and applied_tags(path) >= {"b0", "b1"})
         if not done:
-            _reap_stale_dirs(path)
-            nonce = _nonce()
-            stage = f"{path}.build-{nonce}"
-            docs = (load_table(spark, sf_dir, "documents")
-                    .select("doc_id", "text")
-                    .filter(F.col("text").isNotNull()))
-            build_text_index(docs.filter(F.col("doc_id") % 3 != 0),
-                             stage)
-            # trigger 0: wave-u0 adds; trigger 1: re-defined texts +
-            # adds + takedowns — the exact batch-fixture waves as a
-            # mutation stream (op D rows carry no text)
-            muts = (docs.filter(F.col("doc_id") % 6 == 0)
-                    .select("doc_id", "text", F.lit("U").alias("op"),
-                            F.lit(0).alias("b"))
-                    .unionByName(
-                        docs.filter(F.col("doc_id") % 12 == 1)
-                        .select("doc_id",
-                                F.concat("text",
-                                         F.lit(" refreshed copy"))
-                                .alias("text"),
-                                F.lit("U").alias("op"),
-                                F.lit(1).alias("b")))
-                    .unionByName(
-                        docs.filter(F.col("doc_id") % 6 == 3)
-                        .select("doc_id", "text",
-                                F.lit("U").alias("op"),
-                                F.lit(1).alias("b")))
-                    .unionByName(
-                        docs.filter(F.col("doc_id") % 12 == 2)
-                        .select("doc_id",
-                                F.lit(None).cast("string")
-                                .alias("text"),
-                                F.lit("D").alias("op"),
-                                F.lit(1).alias("b"))))
-            work = scratch_dir(prefix="text_index_replay_")
-            try:
-                feed_dir = stage_trigger_files(muts, work, F.col("b"),
-                                               "mutations")
-                feed = (spark.readStream
-                        .schema("doc_id long, text string, op string,"
-                                " b int")
-                        .option("maxFilesPerTrigger", 1)
-                        .parquet(feed_dir))
-                run_text_index_ingest(
-                    feed, stage,
-                    checkpoint=os.path.join(work, "ckpt"),
-                    compact_every=2)
-            finally:
-                import shutil
-                shutil.rmtree(work, ignore_errors=True)
-            _publish_index(stage, path, nonce)
-            os.replace(_manifest_path(stage), _manifest_path(path))
+            def write(stage: str) -> None:
+                docs = (load_table(spark, sf_dir, "documents")
+                        .select("doc_id", "text")
+                        .filter(F.col("text").isNotNull()))
+                build_text_index(docs.filter(F.col("doc_id") % 3 != 0),
+                                 stage)
+                # trigger 0: wave-u0 adds; trigger 1: re-defined texts
+                # + adds + takedowns — the exact batch-fixture waves as
+                # a mutation stream (op D rows carry no text)
+                muts = (docs.filter(F.col("doc_id") % 6 == 0)
+                        .select("doc_id", "text", F.lit("U").alias("op"),
+                                F.lit(0).alias("b"))
+                        .unionByName(
+                            docs.filter(F.col("doc_id") % 12 == 1)
+                            .select("doc_id",
+                                    F.concat("text",
+                                             F.lit(" refreshed copy"))
+                                    .alias("text"),
+                                    F.lit("U").alias("op"),
+                                    F.lit(1).alias("b")))
+                        .unionByName(
+                            docs.filter(F.col("doc_id") % 6 == 3)
+                            .select("doc_id", "text",
+                                    F.lit("U").alias("op"),
+                                    F.lit(1).alias("b")))
+                        .unionByName(
+                            docs.filter(F.col("doc_id") % 12 == 2)
+                            .select("doc_id",
+                                    F.lit(None).cast("string")
+                                    .alias("text"),
+                                    F.lit("D").alias("op"),
+                                    F.lit(1).alias("b"))))
+                work = scratch_dir(prefix="text_index_replay_")
+                try:
+                    feed_dir = stage_trigger_files(muts, work,
+                                                   F.col("b"), "mutations")
+                    feed = (spark.readStream
+                            .schema("doc_id long, text string, op string,"
+                                    " b int")
+                            .option("maxFilesPerTrigger", 1)
+                            .parquet(feed_dir))
+                    run_text_index_ingest(
+                        feed, stage,
+                        checkpoint=os.path.join(work, "ckpt"),
+                        compact_every=2)
+                finally:
+                    shutil.rmtree(work, ignore_errors=True)
+
+            publish_base(path, write)
         _STREAM_TEXT_INDEX_CACHE[sf_dir] = path
     return _STREAM_TEXT_INDEX_CACHE[sf_dir]
 

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cdc_apply import flatten_envelope, latest_per_key
+from .epoch_sink import drain, guard_epoch
 
 _STATE_RE = re.compile(r"^state_v(\d+)$")
 
@@ -59,22 +60,10 @@ def cdc_upsert_sink(target_path: str, pk: str,
     of envelope rows into the versioned state store at ``target_path``."""
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # State versions are keyed to Spark's batch_id, which restarts
-        # at 0 when a query runs with a fresh/deleted checkpoint. If
-        # that happens against an EXISTING store, merges would silently
-        # ignore all live state (versions < 0 is empty) while readers
-        # keep serving the stale old max version — fail fast instead.
-        # batch_id == an existing version is a legitimate foreachBatch
-        # retry (the overwrite below is idempotent); only strictly
-        # NEWER live versions indicate a checkpoint/store mismatch.
-        newer = [v for v in _versions(target_path) if v > batch_id]
-        if newer:
-            raise RuntimeError(
-                f"cdc_upsert_sink: store {target_path!r} already holds "
-                f"state_v{max(newer)} but this query is writing batch "
-                f"{batch_id} — the checkpoint does not belong to this "
-                "store (deleted/replaced checkpoint?). Restore the "
-                "matching checkpoint or point the sink at a new path.")
+        # state versions are keyed to Spark's batch_id: the shared
+        # guard (streaming/epoch_sink.py) rejects a foreign checkpoint
+        guard_epoch("cdc_upsert_sink", target_path, batch_id,
+                    _versions(target_path))
         flat = flatten_envelope(batch_df, pk, ts_col, manip_col, seq_cols)
         prev = _latest_version_before(target_path, batch_id)
         if prev is not None:
@@ -91,13 +80,8 @@ def run_cdc_upsert(envelopes: DataFrame, target_path: str, pk: str,
                    checkpoint: str, **kwargs):
     """Wire a streaming envelope DataFrame into the upsert sink and
     drain it (availableNow). Returns the StreamingQuery."""
-    q = (envelopes.writeStream
-         .foreachBatch(cdc_upsert_sink(target_path, pk, **kwargs))
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return drain(envelopes, cdc_upsert_sink(target_path, pk, **kwargs),
+                 checkpoint)
 
 
 def vacuum_store(target_path: str, keep: int = 2) -> list[int]:

@@ -61,6 +61,7 @@ from ..functions.text import language_id, quality_score
 from ..sources.cdc_json import decode_envelope, flatten_after_image
 from .ann_upsert import ann_upsert_sink
 from .dedup_ingest import dedup_ingest_sink
+from .epoch_sink import drain
 from .text_index_ingest import text_index_sink
 
 #: after_image payload for a document-capture CDC feed: the envelope
@@ -188,12 +189,6 @@ def run_corpus_ingest(raw: DataFrame, band_index_path: str,
                       embeddings: DataFrame, checkpoint: str, **kwargs):
     """Drain a streaming DataFrame of CDC JSON ``value`` lines through
     the composed sink (availableNow). Returns the finished query."""
-    q = (raw.writeStream
-         .foreachBatch(corpus_ingest_sink(band_index_path,
-                                          ann_index_path, verdicts_path,
-                                          embeddings, **kwargs))
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return drain(raw, corpus_ingest_sink(band_index_path, ann_index_path,
+                                         verdicts_path, embeddings,
+                                         **kwargs), checkpoint)

@@ -19,8 +19,8 @@ store:
   bucket);
 - survivors' rows append to the output store and their band digests
   to the bucket store, both as batch-versioned directories rewritten
-  idempotently on replay — the exactly-once foreachBatch recipe
-  shared with cdc_upsert.py.
+  idempotently on replay (the versioned-rewrite side of
+  streaming/epoch_sink.py).
 
 Scale: the per-batch work is the batch kernel's (map-side signatures,
 band-key equi-joins — no pairwise comparison anywhere); the bucket
@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import _minhash_banded
+from .epoch_sink import drain, guard_epoch
 
 _BUCKET_RE = re.compile(r"^buckets_v(\d+)$")
 _OUT_RE = re.compile(r"^batch_v(\d+)$")
@@ -89,15 +90,8 @@ def near_dup_dedup_sink(store_path: str, out_path: str,
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # same checkpoint/store-mismatch guard as cdc_upsert_sink:
-        # a fresh checkpoint restarting batch ids at 0 against a
-        # populated store would silently ignore all existing state
-        newer = [v for v in _versions(store_path, _BUCKET_RE) if v > batch_id]
-        if newer:
-            raise RuntimeError(
-                f"near_dup_dedup_sink: store {store_path!r} already holds "
-                f"buckets_v{max(newer)} but this query is writing batch "
-                f"{batch_id} — checkpoint does not belong to this store.")
+        guard_epoch("near_dup_dedup_sink", store_path, batch_id,
+                    _versions(store_path, _BUCKET_RE))
 
         banded = _minhash_banded(batch_df.select(id_col, text_col),
                                  text_col, id_col, num_hashes, bands,
@@ -158,13 +152,8 @@ def run_near_dup_dedup(docs: DataFrame, store_path: str, out_path: str,
                        checkpoint: str, **kwargs):
     """Drain a streaming document DataFrame through the near-dup
     dedup sink (availableNow). Returns the StreamingQuery."""
-    q = (docs.writeStream
-         .foreachBatch(near_dup_dedup_sink(store_path, out_path, **kwargs))
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return drain(docs, near_dup_dedup_sink(store_path, out_path, **kwargs),
+                 checkpoint)
 
 
 def dedup_survivors(spark: SparkSession, out_path: str) -> DataFrame:

@@ -1,9 +1,7 @@
 """Streaming maintenance of the exact-substring anchor index:
 foreachBatch window-delta appends with retry-safe idempotence,
 per-batch against-corpus span output, and scheduled compaction —
-the fourth maintained index's streaming twin (same contract as
-streaming/{dedup_ingest,ann_upsert,text_index_ingest}.py; one sink
-shape across the whole served-index family).
+the fourth maintained index's streaming twin.
 
 Each micro-batch of fresh documents:
 1. folds its own text ONCE into stride-1 window hashes,
@@ -13,19 +11,15 @@ Each micro-batch of fresh documents:
    per-batch output dir (overwrite mode, so a retried batch
    re-writes rather than duplicates),
 3. appends the fold as one tagged window delta
-   (``append_windows(windows=...)`` — atomic rename; the tag rides
-   it for the idempotence contract), and
-4. compacts on schedule (``compact_every`` published generations —
-   ``compact_substring_index`` persists live tags to the sibling
-   manifest before folding, so out-of-band compaction stays
-   retry-safe).
+   (``append_windows(windows=...)``), and
+4. compacts on schedule (``compact_every`` published generations).
 
 A retried batch whose tag is already absorbed re-emits NOTHING: the
 span output is part of the skipped work by design — the previous
 attempt's overwrite-mode write either completed (the spans exist) or
-the whole batch re-runs (tag absent). The stale-checkpoint binding
-guard is the shared one: a checkpoint restarting behind the index's
-absorbed batches fails fast.
+the whole batch re-runs (tag absent). The retry skip, the
+foreign-checkpoint guard and the ``compact_every`` trigger are the
+shared tag-sink contract (streaming/epoch_sink.py).
 
 Scale: per trigger the work is batch-sized (one O(n·k) window fold
 over the batch text + the stats-gated anchor join against matching
@@ -39,15 +33,14 @@ import os
 
 from pyspark.sql import DataFrame
 
-from ..operators.ann_index import _delta_dirs
-from ..operators.ann_index import applied_tags as _applied_tags
 from ..operators.dedup import sliding_window_hashes
 from ..operators.substring_index import (
-    _manifest,
     append_windows,
     compact_substring_index,
     ingest_substring_spans,
+    manifest,
 )
+from .epoch_sink import drain, tag_sink
 
 
 def substring_index_sink(index_path: str, text_col: str = "text",
@@ -59,54 +52,32 @@ def substring_index_sink(index_path: str, text_col: str = "text",
     each batch's against-corpus span set lands at
     ``spans_out/batch=<id>/`` (overwrite per batch — retry-safe)."""
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        applied = _applied_tags(index_path)
-        if tag in applied:
-            return                       # foreachBatch retry: no-op
-        later = [t for t in applied
-                 if t.startswith("b") and t[1:].isdigit()
-                 and int(t[1:]) > batch_id]
-        if later:
-            raise RuntimeError(
-                f"substring_index_sink: index {index_path!r} already "
-                f"absorbed batch {max(int(t[1:]) for t in later)} but "
-                f"this query is writing batch {batch_id} — the "
-                "checkpoint does not belong to this store "
-                "(deleted/replaced checkpoint?). Restore the matching "
-                "checkpoint or point the sink at a fresh index.")
+    def apply(batch_df: DataFrame, tag: str) -> int | None:
         if batch_df.isEmpty():
-            return                       # empty trigger: nothing to apply
-        k = _manifest(index_path)["k"]
+            return None                  # empty trigger: nothing to apply
+        spark = batch_df.sparkSession
         w = sliding_window_hashes(batch_df, text_col, id_col,
-                                  k).persist()
+                                  manifest(index_path)["k"]).persist()
         try:
             if spans_out is not None:
                 spans = ingest_substring_spans(
                     spark, index_path, batch_df, text_col=text_col,
                     id_col=id_col, min_len=min_len, windows=w)
                 spans.write.mode("overwrite").parquet(
-                    os.path.join(spans_out, f"batch={batch_id}"))
-            append_windows(spark, index_path, batch_df,
-                           text_col=text_col, id_col=id_col,
-                           tag=tag, windows=w)
+                    os.path.join(spans_out, f"batch={tag[1:]}"))
+            return append_windows(spark, index_path, batch_df,
+                                  text_col=text_col, id_col=id_col,
+                                  tag=tag, windows=w)
         finally:
             w.unpersist()
-        if compact_every and len(_delta_dirs(index_path)) >= compact_every:
-            compact_substring_index(spark, index_path)
 
-    return apply_batch
+    return tag_sink("substring_index_sink", index_path, apply,
+                    compact_substring_index, compact_every)
 
 
 def run_substring_ingest(docs: DataFrame, index_path: str,
                          checkpoint: str, **kwargs):
     """Drain a streaming document DataFrame into the index
     (availableNow). Returns the finished StreamingQuery."""
-    q = (docs.writeStream
-         .foreachBatch(substring_index_sink(index_path, **kwargs))
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return drain(docs, substring_index_sink(index_path, **kwargs),
+                 checkpoint)

@@ -1,27 +1,10 @@
-"""Streaming maintenance of the served inverted text index:
-foreachBatch delta appends with retry-safe idempotence and scheduled
-compaction — the text-search twin of streaming/ann_upsert.py, same
-contract clause for clause.
-
-A production corpus pipeline emits a continuous stream of document
-mutations — fresh pages, re-crawled texts, takedowns. Each
-micro-batch becomes exactly ONE delta generation of the LSM inverted
-index (operators/text_index.py): update rows re-tokenize under the
-batch, deletes become tombstones, and the generation publishes
-atomically carrying tag ``b<batch_id>``.
-
-Idempotence: foreachBatch re-runs a batch whose epoch did not
-commit, and a delta APPEND is not naturally retry-safe — an applied
-tag is skipped on retry. Compaction folds deltas and their tags
-away, so ``compact_text_index`` persists the seen-tag union to the
-sibling ``<index_path>.applied.json`` manifest before folding
-(shared helper); scheduled compaction is therefore retry-safe
-whether the sink triggers it or an operator runs it out of band.
-
-Checkpoint/store binding: a fresh checkpoint restarting batch ids at
-0 against an index that already absorbed later batches means the
-checkpoint does not belong to this store — fail fast rather than
-silently re-mutating (the ann_upsert guard, verbatim semantics).
+"""Streaming maintenance of the served inverted text index: each
+micro-batch of document mutations — fresh pages, re-crawled texts,
+takedowns — becomes exactly ONE delta generation of the LSM inverted
+index (operators/text_index.py): update rows re-tokenize, deletes
+become tombstones. Retry idempotence, the foreign-checkpoint guard
+and scheduled compaction are the shared tag-sink contract
+(streaming/epoch_sink.py).
 
 Scale: per trigger the work is batch-sized (one tokenize pass +
 bucket-partitioned write); reads pay the accumulated delta until the
@@ -33,11 +16,9 @@ broadcast-sized forever on an unbounded stream.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..operators.ann_index import _delta_dirs
-from ..operators.ann_index import applied_tags as _applied_tags
 from ..operators.text_index import compact_text_index, upsert_text_index
+from .epoch_sink import drain, split_ops, tag_sink
 
 
 def text_index_sink(index_path: str, text_col: str = "text",
@@ -49,52 +30,20 @@ def text_index_sink(index_path: str, text_col: str = "text",
     treats all rows as upserts. With ``compact_every=k``, the index
     compacts whenever k delta generations have accumulated."""
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        tag = f"b{batch_id}"
-        applied = _applied_tags(index_path)
-        if tag in applied:
-            return                       # foreachBatch retry: no-op
-        later = [t for t in applied
-                 if t.startswith("b") and t[1:].isdigit()
-                 and int(t[1:]) > batch_id]
-        if later:
-            raise RuntimeError(
-                f"text_index_sink: index {index_path!r} already "
-                f"absorbed batch {max(int(t[1:]) for t in later)} but "
-                f"this query is writing batch {batch_id} — the "
-                "checkpoint does not belong to this store "
-                "(deleted/replaced checkpoint?). Restore the matching "
-                "checkpoint or point the sink at a fresh index.")
-        if op_col is not None:
-            updates = batch_df.filter(F.col(op_col) != "D") \
-                              .select(id_col, text_col)
-            deletes = batch_df.filter(F.col(op_col) == "D") \
-                              .select(id_col)
-            if deletes.isEmpty():
-                deletes = None
-        else:
-            updates = batch_df.select(id_col, text_col)
-            deletes = None
-        if updates.isEmpty():
-            if deletes is None:
-                return                   # empty trigger: nothing to apply
-            updates = None
-        upsert_text_index(spark, index_path, updates, deletes, tag=tag)
-        if compact_every and len(_delta_dirs(index_path)) >= compact_every:
-            compact_text_index(spark, index_path)
+    def apply(batch_df: DataFrame, tag: str) -> int | None:
+        updates, deletes = split_ops(batch_df, op_col, id_col, text_col)
+        if updates is None and deletes is None:
+            return None                  # empty trigger: nothing to apply
+        return upsert_text_index(batch_df.sparkSession, index_path,
+                                 updates, deletes, tag=tag)
 
-    return apply_batch
+    return tag_sink("text_index_sink", index_path, apply,
+                    compact_text_index, compact_every)
 
 
 def run_text_index_ingest(mutations: DataFrame, index_path: str,
                           checkpoint: str, **kwargs):
     """Drain a streaming mutation DataFrame into the index
     (availableNow). Returns the finished StreamingQuery."""
-    q = (mutations.writeStream
-         .foreachBatch(text_index_sink(index_path, **kwargs))
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return q
+    return drain(mutations, text_index_sink(index_path, **kwargs),
+                 checkpoint)

@@ -53,7 +53,7 @@ def main() -> None:
 
     from flink_precisely_demo_spark.operators.ann_index import (
         build_ann_index, query_ann, upsert_ann_index,
-        compact_ann_index, _delta_dirs as ann_deltas)
+        compact_ann_index)
     from flink_precisely_demo_spark.operators.dedup_index import (
         build_band_index, ingest_batch, append_bands,
         ingest_cluster_edges, cluster_labels, compact_band_index)
@@ -62,8 +62,7 @@ def main() -> None:
     from flink_precisely_demo_spark.operators.substring_index import (
         build_substring_index, append_windows, ingest_substring_spans,
         compact_substring_index)
-    from flink_precisely_demo_spark.operators.ann_index import (
-        _delta_dirs)
+    from flink_precisely_demo_spark.operators.lsm import generations
     from flink_precisely_demo_spark.session import get_spark
     from flink_precisely_demo_spark.sources.parquet import load_table
 
@@ -102,10 +101,10 @@ def main() -> None:
                              cluster_edges=edges)
             finally:
                 banded.unpersist()
-            if len(_delta_dirs(band)) >= compact_every:
+            if len(generations(band)) >= compact_every:
                 compact_band_index(spark, band)
         out["band_age_sec"] = round(time.monotonic() - t0, 1)
-        out["band_deltas_at_measure"] = len(_delta_dirs(band))
+        out["band_deltas_at_measure"] = len(generations(band))
         out["band_ingest_sec"] = _min3(
             lambda: ingest_batch(spark, band, probe).count())
         out["cluster_read_sec"] = _min3(
@@ -124,10 +123,10 @@ def main() -> None:
         for i in range(n_batches):
             upsert_ann_index(spark, ann, ups, id_col="vec_id",
                              tag=f"b{i}")
-            if len(ann_deltas(ann)) >= compact_every:
+            if len(generations(ann)) >= compact_every:
                 compact_ann_index(spark, ann, id_col="vec_id")
         out["ann_age_sec"] = round(time.monotonic() - t0, 1)
-        out["ann_deltas_at_measure"] = len(ann_deltas(ann))
+        out["ann_deltas_at_measure"] = len(generations(ann))
         queries = emb.orderBy("vec_id").limit(32)
         out["ann_topk_sec"] = _min3(
             lambda: query_ann(spark, ann, queries, k=10,
@@ -141,10 +140,10 @@ def main() -> None:
         t0 = time.monotonic()
         for i in range(n_batches):
             append_windows(spark, sub, batch_df(i), tag=f"b{i}")
-            if len(_delta_dirs(sub)) >= compact_every:
+            if len(generations(sub)) >= compact_every:
                 compact_substring_index(spark, sub)
         out["substring_age_sec"] = round(time.monotonic() - t0, 1)
-        out["substring_deltas_at_measure"] = len(_delta_dirs(sub))
+        out["substring_deltas_at_measure"] = len(generations(sub))
         out["substring_ingest_sec"] = _min3(
             lambda: ingest_substring_spans(spark, sub, probe).count())
 
@@ -171,10 +170,10 @@ def main() -> None:
                                       (i - 1) * batch_size + 20]]
             upsert_text_index(spark, tix, updates=b, delete_ids=dels,
                               tag=f"b{i}")
-            if len(_delta_dirs(tix)) >= compact_every:
+            if len(generations(tix)) >= compact_every:
                 compact_text_index(spark, tix)
         out["text_age_sec"] = round(time.monotonic() - t0, 1)
-        out["text_deltas_at_measure"] = len(_delta_dirs(tix))
+        out["text_deltas_at_measure"] = len(generations(tix))
         out["text_search_sec"] = _min3(
             lambda: search_text_index(spark, tix, QUERY_TERMS,
                                       k=5).count())

@@ -92,9 +92,9 @@ def test_crashed_build_remains_do_not_poison_serving(spark, tmp_path):
 
     from flink_precisely_demo_spark.operators.ann_index import (
         build_ann_index,
-        index_ok,
         load_centroids,
     )
+    from flink_precisely_demo_spark.operators.lsm import index_ok
     from flink_precisely_demo_spark.sources.parquet import load_table
 
     path = str(tmp_path / "idx")

@@ -11,12 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_precisely_demo_spark.operators.ann_index import (
-    _delta_dirs,
     build_ann_index,
     compact_ann_index,
     query_ann,
     upsert_ann_index,
 )
+from flink_precisely_demo_spark.operators.lsm import generations as _delta_dirs
 from flink_precisely_demo_spark.sources.parquet import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -299,8 +299,9 @@ def test_streaming_sink_tags_survive_compaction(spark, tmp_path):
     """compact_every folds the deltas (and their in-dir tags) away;
     the sibling manifest must keep the applied set so a late retry
     of an already-compacted batch still no-ops."""
+    from flink_precisely_demo_spark.operators.lsm import applied_tags as _applied_tags
     from flink_precisely_demo_spark.streaming.ann_upsert import (
-        _applied_tags, ann_upsert_sink)
+        ann_upsert_sink)
 
     path = _fresh_index(spark, tmp_path)
     emb = load_table(spark, SF, "embeddings")
@@ -327,8 +328,9 @@ def test_out_of_band_compaction_keeps_retry_idempotent(spark, tmp_path):
     sibling manifest before folding them away — otherwise a
     foreachBatch retry after the external compact re-applies an
     already-absorbed batch (r12 advisory, the medium finding)."""
+    from flink_precisely_demo_spark.operators.lsm import applied_tags as _applied_tags
     from flink_precisely_demo_spark.streaming.ann_upsert import (
-        _applied_tags, ann_upsert_sink)
+        ann_upsert_sink)
 
     path = _fresh_index(spark, tmp_path)
     emb = load_table(spark, SF, "embeddings")

@@ -133,8 +133,8 @@ def test_streaming_sink_retry_and_binding(spark, tmp_path):
     record."""
     import pytest
 
-    from flink_precisely_demo_spark.operators.ann_index import (
-        _delta_dirs, applied_tags)
+    from flink_precisely_demo_spark.operators.lsm import (
+        applied_tags, generations as _delta_dirs)
     from flink_precisely_demo_spark.streaming.dedup_ingest import (
         dedup_ingest_sink)
 

@@ -196,148 +196,6 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     assert got == [(1, "first"), (2, "other")]
 
 
-class _FakeValueState:
-    def __init__(self):
-        self.v = None
-
-    def exists(self):
-        return self.v is not None
-
-    def get(self):
-        return self.v
-
-    def update(self, v):
-        self.v = v
-
-    def clear(self):
-        self.v = None
-
-
-class _FakeListState:
-    def __init__(self):
-        self.items = []
-
-    def get(self):
-        return iter(self.items)
-
-    def appendList(self, items):
-        self.items.extend(items)
-
-    def clear(self):
-        self.items = []
-
-
-class _FakeHandle:
-    """Duck-typed StatefulProcessorHandle: just the two getters the
-    processor uses, backed by plain Python state."""
-
-    def __init__(self):
-        self.states = {}
-
-    def getValueState(self, name, schema):
-        return self.states.setdefault(name, _FakeValueState())
-
-    def getListState(self, name, schema):
-        return self.states.setdefault(name, _FakeListState())
-
-
-def test_tws_processor_logic_against_fake_state():
-    """The TWS StatefulProcessor's buffer/flush/latest-wins semantics,
-    exercised directly against a faked state handle — this runs where
-    the full transformWithStateInPandas protocol cannot (its Python
-    worker imports protobuf, absent here), so the processor body has
-    executed coverage either way. Semantics pinned (EnrichmentJoin
-    buffer/flush paths): facts before any dim buffer silently; a dim
-    arrival flushes the buffer in order; later facts join immediately;
-    a newer dim wins for subsequent facts; state round-trips across
-    handleInputRows calls as JSON."""
-    import json as _json
-
-    import pandas as pd
-
-    from flink_precisely_demo_spark.streaming.stateful_join_tws import (
-        _EnrichProcessor,
-    )
-
-    proc = _EnrichProcessor(out_cols=["k", "ord", "fval", "dval"],
-                            dim_carry=["dval"], ts_fields=[])
-    handle = _FakeHandle()
-    proc.init(handle)
-
-    def batch(rows):
-        pdf = pd.DataFrame(rows, columns=["__ord", "__side", "__payload"])
-        return list(proc.handleInputRows((7,), iter([pdf]), None))
-
-    def fact(ordv, fval):
-        return (ordv, 1, _json.dumps({"k": 7, "ord": ordv, "fval": fval}))
-
-    def dim(ordv, dval):
-        return (ordv, 0, _json.dumps({"k": 7, "ord": ordv, "dval": dval}))
-
-    # batch 1: facts only -> nothing emitted, both buffered in order
-    assert batch([fact(3.0, "f2"), fact(1.0, "f1")]) == []
-    assert not handle.states["dim"].exists()
-    buffered = [_json.loads(t[0])["fval"]
-                for t in handle.states["buffer"].items]
-    assert buffered == ["f1", "f2"]          # event-time order, not arrival
-
-    # batch 2: dim flushes the buffer, a later fact joins immediately,
-    # a newer dim wins for the fact after it
-    out = batch([dim(2.0, "v1"), fact(2.5, "f3"), dim(4.0, "v2"),
-                 fact(5.0, "f4")])
-    got = [(r["fval"], r["dval"]) for r in out[0].to_dict("records")]
-    assert got == [("f1", "v1"), ("f2", "v1"), ("f3", "v1"), ("f4", "v2")]
-    assert handle.states["buffer"].items == []
-    assert _json.loads(handle.states["dim"].get()[0])["dval"] == "v2"
-
-    # batch 3: state persisted across calls — new fact joins v2
-    out = batch([fact(6.0, "f5")])
-    assert [(r["fval"], r["dval"]) for r in out[0].to_dict("records")] \
-        == [("f5", "v2")]
-
-
-def test_stateful_enrich_tws_variant(spark, tmp_path):
-    """transformWithStateInPandas twin (ValueState/ListState 1:1 with
-    the reference) produces the same buffer/flush/latest results."""
-    # the TWS state protocol needs protobuf, absent in this container
-    pytest.importorskip("google.protobuf.descriptor")
-    pytest.importorskip("pyspark.sql.streaming.stateful_processor")
-    from flink_precisely_demo_spark.streaming.stateful_join_tws import (
-        enrich_stream_tws,
-        tws_session_confs,
-    )
-    old = {}
-    for k, v in tws_session_confs().items():
-        old[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    try:
-        fact_dir = tmp_path / "facts"; fact_dir.mkdir()
-        dim_dir = tmp_path / "dims"; dim_dir.mkdir()
-        _write_jsonl(fact_dir / "f.json", [
-            {"k": 7, "ord": 1.0, "fval": "f1"},
-            {"k": 7, "ord": 3.0, "fval": "f2"},
-            {"k": 7, "ord": 5.0, "fval": "f3"},
-        ])
-        _write_jsonl(dim_dir / "d.json", [
-            {"k": 7, "ord": 2.0, "dval": "v1"},
-            {"k": 7, "ord": 4.0, "dval": "v2"},
-        ])
-        fact = (spark.readStream.schema("k int, ord double, fval string")
-                .json(str(fact_dir)))
-        dim = (spark.readStream.schema("k int, ord double, dval string")
-               .json(str(dim_dir)))
-        res = run_to_memory(enrich_stream_tws(fact, dim, "k", "ord"),
-                            "enrich_tws", spark)
-        rows = {r["fval"]: r["dval"] for r in res.collect()}
-        assert rows == {"f1": "v1", "f2": "v1", "f3": "v2"}
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 def test_checkpoint_restart_preserves_state(spark, tmp_path):
     """Fault tolerance (M3/SURVEY §5.3): stop a windowed-agg query,
     append more data, restart from the same checkpoint — the restarted
@@ -767,6 +625,30 @@ def test_streaming_near_dup_chained_suppression(spark, tmp_path):
                                "doc_id long, text string"), 1)
     got = sorted(r["doc_id"] for r in dedup_survivors(spark, out).collect())
     assert got == [1]   # A cross-suppressed; B suppressed through A
+
+
+def test_streaming_near_dup_rejects_foreign_checkpoint(spark, tmp_path):
+    """The bucket store's epoch guard in the default run (the
+    cross-process twin in test_cross_process.py is slow-marked): a
+    fresh checkpoint writing batch 0 against a store that already
+    holds buckets_v1 must raise, while a retry of batch 1 stays a
+    legitimate idempotent rewrite."""
+    from flink_precisely_demo_spark.sources.parquet import load_table
+    from flink_precisely_demo_spark.streaming.streaming_dedup import (
+        near_dup_dedup_sink,
+    )
+
+    from .conftest import SF_SMOKE
+
+    docs = load_table(spark, SF_SMOKE, "documents") \
+        .select("doc_id", "text")
+    store, out = str(tmp_path / "b"), str(tmp_path / "o")
+    sink = near_dup_dedup_sink(store, out)
+    sink(docs.filter(F.col("doc_id") % 2 == 0), 0)
+    sink(docs.filter(F.col("doc_id") % 2 == 1), 1)
+    with pytest.raises(RuntimeError, match="checkpoint does not belong"):
+        sink(docs.filter(F.col("doc_id") < 10), 0)
+    sink(docs.filter(F.col("doc_id") % 2 == 1), 1)
 
 
 def test_streaming_session_window(spark, tmp_path):

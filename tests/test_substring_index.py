@@ -11,9 +11,9 @@ import os
 
 from pyspark.sql import functions as F
 
-from flink_precisely_demo_spark.operators.ann_index import (
-    _delta_dirs,
+from flink_precisely_demo_spark.operators.lsm import (
     applied_tags,
+    generations as _delta_dirs,
 )
 from flink_precisely_demo_spark.operators.dedup import (
     exact_substring_spans,
@@ -162,8 +162,8 @@ def test_streaming_sink_idempotence_and_binding_guard(spark, tmp_path):
     fast."""
     import pytest
 
-    from flink_precisely_demo_spark.operators.ann_index import (
-        _delta_dirs,
+    from flink_precisely_demo_spark.operators.lsm import (
+        generations as _delta_dirs,
     )
     from flink_precisely_demo_spark.streaming.substring_ingest import (
         substring_index_sink,

@@ -11,7 +11,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from flink_precisely_demo_spark.operators.ann_index import (
+from flink_precisely_demo_spark.operators.lsm import (
     applied_tags,
     delta_tags,
 )
@@ -238,7 +238,7 @@ def test_streaming_sink_idempotence_and_binding_guard(spark, tmp_path):
     assert st["n_deltas"] == 0           # compact_every=2 fired
     hits = search_text_index(spark, path, ("alpha",), k=10)
     assert {r["doc_id"] for r in hits.collect()} == {1, 3}
-    from flink_precisely_demo_spark.operators.ann_index import (
+    from flink_precisely_demo_spark.operators.lsm import (
         applied_tags as _at,
     )
     assert _at(path) >= {"b1", "b2"}     # tags survive the fold
